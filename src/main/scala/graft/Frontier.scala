@@ -157,8 +157,8 @@ object Frontier {
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.TopKPlanning.register(spark)
     val registry = SparkEntry.benchQueries
-    val baseVecs = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    try spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+    val baseVecs = graft.sources.Tables.load(spark, sfDir, "embeddings").count()
+    try graft.sources.Tables.load(spark, sfDir, "embeddings").count()
     catch { case _: Throwable => () }
 
     // both corpus shapes come from the ONE composed-layout entry point

@@ -271,7 +271,7 @@ object StressScale {
       !java.nio.file.Files.exists(
         java.nio.file.Paths.get(s"$scaledDir/$t.parquet"))
     if (missing("embeddings")) {
-      val baseVecs = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
+      val baseVecs = graft.sources.Tables.load(spark, sfDir, "embeddings").count()
       val synth =
         if (clustered) synthEmbeddingsClustered(spark, baseVecs * factor)
         else synthEmbeddings(spark, baseVecs * factor)
@@ -280,12 +280,12 @@ object StressScale {
         .write.mode("overwrite").parquet(s"$scaledDir/embeddings.parquet")
     }
     if (missing("documents")) {
-      val baseDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+      val baseDocs = graft.sources.Tables.load(spark, sfDir, "documents").count()
       synthDocuments(spark, baseDocs * factor).repartition(32)
         .write.mode("overwrite").parquet(s"$scaledDir/documents.parquet")
     }
     if (missing("events")) {
-      val baseEv = spark.read.parquet(s"$sfDir/events.parquet")
+      val baseEv = graft.sources.Tables.load(spark, sfDir, "events")
       val nEv = baseEv.count()
       val nUsers = baseEv.select("user_id").distinct().count()
       synthEvents(spark, nEv * factor, nUsers * factor).repartition(32)
@@ -432,7 +432,7 @@ object StressScale {
     spark.sparkContext.setLogLevel("WARN")
     graft.plans.TopKPlanning.register(spark)
 
-    val baseDocs = spark.read.parquet(s"$sfDir/documents.parquet").count()
+    val baseDocs = graft.sources.Tables.load(spark, sfDir, "documents").count()
     val scaledDir =
       ensureScaledTables(spark, sfDir, outRoot, factor, clustered = false)
 
@@ -452,7 +452,7 @@ object StressScale {
         Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(160))
       }
     // warmup
-    try spark.read.parquet(s"$sfDir/documents.parquet").count()
+    try graft.sources.Tables.load(spark, sfDir, "documents").count()
     catch { case _: Throwable => () }
 
     val only = args.drop(3).toSet

@@ -12,8 +12,10 @@ import graft.sources.Tables
   * [WHERE p [AND p]*]`, equality-only predicates, reference
   * `challenge/planner.py:16-112`) parsed by the SAME parser the cost
   * planner uses ([[ChallengePlanner.parseSql]]), then compiled to
-  * DataFrame operations over the fixture catalog
-  * ([[Tables.registerAll]] — this is its consumer).
+  * DataFrame operations over the one or two fixture tables the statement
+  * names, each loaded through [[Tables.byName]] (so `events.ts` is
+  * normalized). The session catalog is not touched: no temp view is
+  * created or replaced.
   *
   * Compilation is declarative: per-side filters are applied before the
   * join (the reference's O10 pushdown is Catalyst's
@@ -26,8 +28,11 @@ import graft.sources.Tables
   *
   * Scale: the compiled plan is indistinguishable from hand-written
   * DataFrame code — scans prune columns, filters reach parquet, the join
-  * broadcasts its filtered dimension; nothing about the SQL path adds
-  * driver-side work beyond parsing.
+  * broadcasts its filtered dimension. Building the DataFrame adds no
+  * Spark job and no driver-side work beyond parsing and one file listing
+  * per named table: [[Tables.load]] reuses the table's cached parquet
+  * schema instead of inferring it (one job per table) again, and only
+  * the named tables are loaded, not the whole catalog.
   */
 object MiniSql {
 
@@ -42,11 +47,10 @@ object MiniSql {
     * names (`part`, `lineitem`, …). */
   def execute(spark: SparkSession, dir: String, sql: String): DataFrame = {
     val parsed = ChallengePlanner.parseSql(sql)
-    Tables.registerAll(spark, dir)
 
     def table(name: String): DataFrame = {
       require(Tables.names.contains(name), s"Unknown table: $name")
-      spark.table(name).alias(name)
+      Tables.byName(spark, dir, name).alias(name)
     }
 
     def filtersFor(collection: String): Option[Column] = {

@@ -1,6 +1,10 @@
 package graft.sources
 
+import java.io.FileNotFoundException
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over the driver fixtures (TESTDATA.md).
   *
@@ -22,8 +26,65 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  /** A fresh DataFrame over `dir/name.parquet`. A plain
+    * `spark.read.parquet` infers the schema from the parquet footers
+    * with one Spark job per call — on the job-bound sf0.1 statements
+    * that job cost more than the scan itself. So the first load of a
+    * table infers it and caches the SCHEMA (never the DataFrame: a
+    * reused DataFrame would share expression ids across queries and pin
+    * a stale file listing); later loads pass it to
+    * `spark.read.schema(s).parquet`, which starts no job and still builds
+    * a fresh relation with fresh expression ids.
+    *
+    * The cache key ([[SchemaKey]]) is everything inference depends on:
+    *   - the qualified path;
+    *   - (path, length, modification time) of every leaf file, from one
+    *     driver-side Hadoop `listFiles` — a table rewritten in place is
+    *     inferred again;
+    *   - the session's set confs (`spark.conf.getAll`) — e.g.
+    *     `nanosAsLong` decides whether `events.ts` infers as long or
+    *     fails.
+    * A path that cannot be listed is read uncached, so a missing table
+    * raises Spark's own `PATH_NOT_FOUND` error as before. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    schemaKey(spark, path) match {
+      case None => spark.read.parquet(path)
+      case Some(key) =>
+        schemas.synchronized(Option(schemas.get(key))) match {
+          case Some(schema) => spark.read.schema(schema).parquet(path)
+          case None =>
+            // inferred outside the lock: one slow footer read must not
+            // stall loads of other tables
+            val df = spark.read.parquet(path)
+            schemas.synchronized(schemas.putIfAbsent(key, df.schema))
+            df
+        }
+    }
+  }
+
+  private final case class SchemaKey(path: String,
+      files: Seq[(String, Long, Long)], confs: Map[String, String])
+
+  /** Bounded LRU of inferred schemas (a few entries per session in
+    * practice: one per fixture table and conf set). */
+  private val MaxSchemas = 256
+  private val schemas = new java.util.LinkedHashMap[SchemaKey, StructType](16, 0.75f, true) {
+    override def removeEldestEntry(
+        e: java.util.Map.Entry[SchemaKey, StructType]): Boolean = size() > MaxSchemas
+  }
+
+  private def schemaKey(spark: SparkSession, path: String): Option[SchemaKey] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val qualified = fs.makeQualified(p)
+    try {
+      val it = fs.listFiles(qualified, true)
+      val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+        .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
+      Some(SchemaKey(qualified.toString, files, spark.conf.getAll))
+    } catch { case _: FileNotFoundException => None }
+  }
 
   /** Session configs every graft entry point needs.
     *   - `nanosAsLong`: the events fixture stores parquet INT64
@@ -113,12 +174,15 @@ object Tables {
   def documents(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
-  /** Register all fixture tables as temp views so `spark.sql` works over
-    * them (mini-SQL front end, SURVEY §2.3). `events` goes through the
-    * timestamp conversion above, not the raw long-nanos read. */
+  /** The fixture table `name` as SQL sees it: [[events]] with its `ts`
+    * normalized, every other table as [[load]] reads it. */
+  def byName(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir) else load(spark, dir, name)
+
+  /** Register all fixture tables ([[byName]]) as temp views so
+    * `spark.sql` works over them. Starts no Spark job once each table's
+    * schema is cached (see [[load]]). [[graft.plans.MiniSql]] does not
+    * need the views: it loads the tables a statement names directly. */
   def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach { n =>
-      val df = if (n == "events") events(spark, dir) else load(spark, dir, n)
-      df.createOrReplaceTempView(n)
-    }
+    names.foreach(n => byName(spark, dir, n).createOrReplaceTempView(n))
 }

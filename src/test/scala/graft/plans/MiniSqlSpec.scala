@@ -1,8 +1,10 @@
 package graft.plans
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.types.TimestampType
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.JobCounter.jobsOf
 import graft.TestSpark
 import graft.operators.Relational
 
@@ -51,5 +53,37 @@ class MiniSqlSpec extends AnyFunSuite {
     assertThrows[IllegalArgumentException] {
       MiniSql.execute(spark, dir, "SELECT x FROM not_a_table WHERE x = 1")
     }
+  }
+
+  private val joinSql =
+    """SELECT l.l_orderkey, p.p_name
+      |FROM lineitem l JOIN part p ON l.l_partkey = p.p_partkey
+      |WHERE p.p_brand = 'Brand#4'""".stripMargin
+
+  test("building a join statement starts no Spark job once its tables were loaded") {
+    MiniSql.execute(spark, dir, joinSql)
+    val (df, jobs) = jobsOf(spark)(MiniSql.execute(spark, dir, joinSql))
+    assert(jobs == 0)
+    assert(df.collect().nonEmpty)
+  }
+
+  test("execute creates and replaces no temp view") {
+    graft.sources.Tables.names.foreach(spark.catalog.dropTempView)
+    // a view named like a fixture table must neither be read nor replaced
+    spark.range(1).createOrReplaceTempView("part")
+    try {
+      def views = spark.catalog.listTables().collect().toSeq.map(t => (t.name, t.tableType))
+      val before = views
+      val rows = MiniSql.execute(spark, dir, joinSql).collect()
+      assert(rows.nonEmpty)
+      assert(views == before)
+      assert(spark.table("part").columns.toSeq == Seq("id"))
+    } finally spark.catalog.dropTempView("part")
+  }
+
+  test("a statement over events returns ts as a timestamp") {
+    val df = MiniSql.execute(spark, dir, "SELECT event_id, ts FROM events")
+    assert(df.schema("ts").dataType == TimestampType)
+    assert(df.collect().nonEmpty)
   }
 }
