@@ -178,6 +178,92 @@ object Jpeg {
   private val FlatAcVals: Array[Int] = (0 to 255).toArray
   private val FlatAcEnc = encoderCodes(FlatAcBits, FlatAcVals)
 
+  // The header segments that do not depend on the image are built once,
+  // so an encoder writes each one with one bulk write: for a 16×16 MJPEG
+  // frame they are ~330 of its ~350 bytes.
+
+  private def bytes(v: Int*): Array[Byte] = v.map(_.toByte).toArray
+
+  /** SOI + APP0 (JFIF 1.1, 1:1 aspect ratio, no thumbnail). */
+  private val SoiApp0: Array[Byte] = bytes(0xff, 0xd8, 0xff, 0xe0, 0, 16,
+    'J', 'F', 'I', 'F', 0, 1, 1, 0, 0, 1, 0, 1, 0, 0)
+
+  private val Soi: Array[Byte] = bytes(0xff, 0xd8)
+
+  /** A Huffman table as a DHT segment carries it: the 16 code-length
+    * counts, then the symbols. */
+  private def huffSpec(bits: Array[Int], vals: Array[Int]): Array[Byte] =
+    (bits.slice(1, 17) ++ vals).map(_.toByte)
+
+  /** One DHT segment holding one table as table class/id `tcTh`. */
+  private def dhtSegment(tcTh: Int, spec: Array[Byte]): Array[Byte] = {
+    val len = 2 + 1 + spec.length
+    bytes(0xff, 0xc4, len >>> 8, len & 0xff, tcTh) ++ spec
+  }
+
+  private val DcSpec = huffSpec(DcBits, DcVals)
+  private val AcSpec = huffSpec(AcBits, AcVals)
+  private val DcSpecCh = huffSpec(DcBitsCh, DcValsCh)
+  private val AcSpecCh = huffSpec(AcBitsCh, AcValsCh)
+  private val FlatAcSpec = huffSpec(FlatAcBits, FlatAcVals)
+
+  private val DhtDc = dhtSegment(0x00, DcSpec)
+  private val DhtDcCh = dhtSegment(0x01, DcSpecCh)
+  private val DhtFlatAc = dhtSegment(0x10, FlatAcSpec)
+  /** Baseline gray: DC and AC luminance tables. */
+  private val GrayDht = DhtDc ++ dhtSegment(0x10, AcSpec)
+  /** Baseline color: luminance tables 0, chrominance tables 1. */
+  private val YcbcrDht = GrayDht ++ DhtDcCh ++ dhtSegment(0x11, AcSpecCh)
+
+  /** Baseline SOS, one component: DC/AC tables 0, full spectral range. */
+  private val GraySos = bytes(0xff, 0xda, 0, 8, 1, 1, 0x00, 0, 63, 0)
+  /** Baseline SOS, three components: luma tables 0/0, chroma 1/1. */
+  private val YcbcrSos =
+    bytes(0xff, 0xda, 0, 12, 3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0)
+
+  /** DQT segment: table i of `quants` as id i, 8-bit, zigzag order. */
+  private def dqtSegment(quants: Array[Int]*): Array[Byte] = {
+    val len = 2 + 65 * quants.length
+    val seg = new Array[Byte](2 + len)
+    seg(0) = 0xff.toByte; seg(1) = 0xdb.toByte
+    seg(2) = (len >>> 8).toByte; seg(3) = len.toByte
+    var p = 4
+    var id = 0
+    while (id < quants.length) {
+      seg(p) = id.toByte
+      var zz = 0
+      while (zz < 64) { seg(p + 1 + zz) = quants(id)(ZigZag(zz)).toByte; zz += 1 }
+      p += 65
+      id += 1
+    }
+    seg
+  }
+
+  /** SOFn segment (`marker` 0xc0 or 0xc2), 8-bit precision; `comps` holds
+    * (component id, h << 4 | v, quant id) per component. */
+  private def sofSegment(marker: Int, width: Int, height: Int,
+      comps: Array[Int]): Array[Byte] = {
+    val len = 8 + comps.length
+    val seg = new Array[Byte](2 + len)
+    seg(0) = 0xff.toByte; seg(1) = marker.toByte
+    seg(2) = (len >>> 8).toByte; seg(3) = len.toByte
+    seg(4) = 8
+    seg(5) = (height >>> 8).toByte; seg(6) = height.toByte
+    seg(7) = (width >>> 8).toByte; seg(8) = width.toByte
+    seg(9) = (comps.length / 3).toByte
+    var i = 0
+    while (i < comps.length) { seg(10 + i) = comps(i).toByte; i += 1 }
+    seg
+  }
+
+  /** DRI segment: a restart marker every `every` MCUs. */
+  private def driSegment(every: Int): Array[Byte] =
+    bytes(0xff, 0xdd, 0, 4, every >>> 8, every & 0xff)
+
+  private def marker(out: java.io.ByteArrayOutputStream, m: Int): Unit = {
+    out.write(0xff); out.write(m)
+  }
+
   // 1D DCT basis: cosTab(u)(x) = C(u)/2 · cos((2x+1)uπ/16), C(0)=1/√2 —
   // applying it twice (rows then columns) is the 2D 0.25·C(u)C(v) form.
   private val cosTab: Array[Array[Double]] = Array.tabulate(8, 8) { (u, x) =>
@@ -357,39 +443,13 @@ object Jpeg {
     val height = pixels.length / width
     require(width < (1 << 16) && height < (1 << 16), "dimensions exceed u16")
     val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def u16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    marker(0xd8) // SOI
-    marker(0xe0) // APP0: JFIF 1.1, no density, no thumbnail
-    u16(16)
-    out.write("JFIF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    out.write(0); out.write(1); out.write(1) // version 1.1
-    out.write(0); u16(1); u16(1) // aspect-ratio units, 1:1
-    out.write(0); out.write(0) // no thumbnail
-    marker(0xdb) // DQT: table 0, 8-bit, zigzag order
-    u16(67)
-    out.write(0x00)
-    var zz = 0
-    while (zz < 64) { out.write(quant(ZigZag(zz))); zz += 1 }
-    marker(0xc0) // SOF0: 8-bit, 1 component, 1×1 sampling, q-table 0
-    u16(11)
-    out.write(8); u16(height); u16(width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    def dht(tcTh: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4)
-      u16(2 + 1 + 16 + vals.length)
-      out.write(tcTh)
-      var l = 1
-      while (l <= 16) { out.write(bits(l)); l += 1 }
-      vals.foreach(out.write)
-    }
-    dht(0x00, DcBits, DcVals) // DC table 0
-    dht(0x10, AcBits, AcVals) // AC table 0
-    if (restartEvery > 0) { marker(0xdd); u16(4); u16(restartEvery) }
-    marker(0xda) // SOS: 1 component, DC/AC tables 0, full spectral range
-    u16(8)
-    out.write(1); out.write(1); out.write(0x00)
-    out.write(0); out.write(63); out.write(0)
+    out.write(SoiApp0)
+    out.write(dqtSegment(quant))
+    // SOF0: 1 component, 1×1 sampling, quant table 0
+    out.write(sofSegment(0xc0, width, height, Array(1, 0x11, 0)))
+    out.write(GrayDht)
+    if (restartEvery > 0) out.write(driSegment(restartEvery))
+    out.write(GraySos)
     val bw = new BitWriter(out)
     val blocksX = (width + 7) / 8
     val blocksY = (height + 7) / 8
@@ -402,7 +462,7 @@ object Jpeg {
       while (bx < blocksX) {
         if (restartEvery > 0 && mcu > 0 && mcu % restartEvery == 0) {
           bw.flush()
-          marker(0xd0 + ((mcu / restartEvery - 1) % 8))
+          marker(out, 0xd0 + ((mcu / restartEvery - 1) % 8))
           pred = 0
         }
         loadBlock(pixels, width, height, bx, by, block)
@@ -413,7 +473,7 @@ object Jpeg {
       by += 1
     }
     bw.flush()
-    marker(0xd9) // EOI
+    marker(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -477,10 +537,9 @@ object Jpeg {
         case _ => true
       } && acBands.forall { case (a, b) => a <= b },
       "acBands must partition 1..63 contiguously")
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
     def u16v(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
     def sos(scan: Seq[(Int, Int)], ss: Int, se: Int, ah: Int, al: Int): Unit = {
-      marker(0xda)
+      marker(out, 0xda)
       u16v(6 + 2 * scan.length)
       out.write(scan.length)
       scan.foreach { case (id, tt) => out.write(id); out.write(tt) }
@@ -651,18 +710,6 @@ object Jpeg {
     }
   }
 
-  /** Shared DHT writer for the encoder fronts. */
-  private def writeDht(out: java.io.ByteArrayOutputStream, tcTh: Int,
-      bits: Array[Int], vals: Array[Int]): Unit = {
-    out.write(0xff); out.write(0xc4)
-    val len = 2 + 1 + 16 + vals.length
-    out.write((len >>> 8) & 0xff); out.write(len & 0xff)
-    out.write(tcTh)
-    var l = 1
-    while (l <= 16) { out.write(bits(l)); l += 1 }
-    vals.foreach(out.write)
-  }
-
   /** Encode a grayscale raster as a PROGRESSIVE JPEG (SOF2) with the
     * standard successive-approximation scan script (see
     * [[writeProgressiveScans]]). Decoded coefficients equal the
@@ -679,26 +726,18 @@ object Jpeg {
     val height = pixels.length / width
     require(width < (1 << 16) && height < (1 << 16), "dimensions exceed u16")
     val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def u16v(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    marker(0xd8) // SOI
-    marker(0xdb) // DQT: table 0, 8-bit, zigzag order
-    u16v(67)
-    out.write(0x00)
-    var zz = 0
-    while (zz < 64) { out.write(quant(ZigZag(zz))); zz += 1 }
-    marker(0xc2) // SOF2: 8-bit, 1 component, 1x1 sampling, q-table 0
-    u16v(11)
-    out.write(8); u16v(height); u16v(width); out.write(1)
-    out.write(1); out.write(0x11); out.write(0)
-    writeDht(out, 0x00, DcBits, DcVals)
-    writeDht(out, 0x10, FlatAcBits, FlatAcVals)
+    out.write(Soi)
+    out.write(dqtSegment(quant))
+    // SOF2: 1 component, 1x1 sampling, quant table 0
+    out.write(sofSegment(0xc2, width, height, Array(1, 0x11, 0)))
+    out.write(DhtDc)
+    out.write(DhtFlatAc)
     val blocksX = (width + 7) / 8
     val blocksY = (height + 7) / 8
     val q = quantizePlane(pixels, width, height, blocksX, blocksY, quant)
     val comp = new ProgComp(1, 1, 1, 0, DcEnc, q, blocksX, blocksX, blocksY)
     writeProgressiveScans(out, Array(comp), blocksX, blocksY, acBands)
-    marker(0xd9) // EOI
+    marker(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -725,25 +764,14 @@ object Jpeg {
       require(q.length == 64 && q.forall(v => v >= 1 && v <= 255),
         "quant tables must be 64 entries in [1, 255]"))
     val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def u16v(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    marker(0xd8) // SOI
-    marker(0xdb) // DQT: both tables in one segment (id 0 luma, 1 chroma)
-    u16v(2 + 65 * 2)
-    Seq((0x00, quantY), (0x01, quantC)).foreach { case (id, q) =>
-      out.write(id)
-      var zz = 0
-      while (zz < 64) { out.write(q(ZigZag(zz))); zz += 1 }
-    }
-    marker(0xc2) // SOF2: 3 components, Y 2x2 / chroma 1x1
-    u16v(8 + 3 * 3)
-    out.write(8); u16v(height); u16v(width); out.write(3)
-    out.write(1); out.write(0x22); out.write(0)
-    out.write(2); out.write(0x11); out.write(1)
-    out.write(3); out.write(0x11); out.write(1)
-    writeDht(out, 0x00, DcBits, DcVals)
-    writeDht(out, 0x01, DcBitsCh, DcValsCh)
-    writeDht(out, 0x10, FlatAcBits, FlatAcVals)
+    out.write(Soi)
+    out.write(dqtSegment(quantY, quantC)) // id 0 luma, 1 chroma
+    // SOF2: 3 components, Y 2x2 / chroma 1x1
+    out.write(sofSegment(0xc2, width, height,
+      Array(1, 0x22, 0, 2, 0x11, 1, 3, 0x11, 1)))
+    out.write(DhtDc)
+    out.write(DhtDcCh)
+    out.write(DhtFlatAc)
     val mcusX = (width + 15) / 16
     val mcusY = (height + 15) / 16
     val qY = quantizePlane(y, width, height, mcusX * 2, mcusY * 2, quantY)
@@ -757,7 +785,7 @@ object Jpeg {
       new ProgComp(3, 1, 1, 1, DcEncCh, qCr, mcusX,
         (cw + 7) / 8, (ch + 7) / 8))
     writeProgressiveScans(out, comps, mcusX, mcusY, acBands)
-    marker(0xd9) // EOI
+    marker(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -798,48 +826,14 @@ object Jpeg {
       require(q.length == 64 && q.forall(v => v >= 1 && v <= 255),
         "quant tables must be 64 entries in [1, 255]"))
     val out = new java.io.ByteArrayOutputStream()
-    def marker(m: Int): Unit = { out.write(0xff); out.write(m) }
-    def u16(v: Int): Unit = { out.write((v >>> 8) & 0xff); out.write(v & 0xff) }
-    marker(0xd8) // SOI
-    marker(0xe0) // APP0: JFIF 1.1, no density, no thumbnail
-    u16(16)
-    out.write("JFIF".getBytes(java.nio.charset.StandardCharsets.US_ASCII))
-    out.write(0); out.write(1); out.write(1)
-    out.write(0); u16(1); u16(1)
-    out.write(0); out.write(0)
-    marker(0xdb) // DQT: both tables in one segment (id 0 luma, 1 chroma)
-    u16(2 + 65 * 2)
-    Seq((0x00, quantY), (0x01, quantC)).foreach { case (id, q) =>
-      out.write(id)
-      var zz = 0
-      while (zz < 64) { out.write(q(ZigZag(zz))); zz += 1 }
-    }
-    marker(0xc0) // SOF0: 3 components, Y hSamp×vSamp / chroma 1×1
-    u16(8 + 3 * 3)
-    out.write(8); u16(height); u16(width); out.write(3)
-    out.write(1); out.write((hSamp << 4) | vSamp); out.write(0) // Y, quant 0
-    out.write(2); out.write(0x11); out.write(1) // Cb: h=1, v=1, quant 1
-    out.write(3); out.write(0x11); out.write(1) // Cr
-    def dht(tcTh: Int, bits: Array[Int], vals: Array[Int]): Unit = {
-      marker(0xc4)
-      u16(2 + 1 + 16 + vals.length)
-      out.write(tcTh)
-      var l = 1
-      while (l <= 16) { out.write(bits(l)); l += 1 }
-      vals.foreach(out.write)
-    }
-    dht(0x00, DcBits, DcVals) // DC luma → table 0
-    dht(0x10, AcBits, AcVals) // AC luma → table 0
-    dht(0x01, DcBitsCh, DcValsCh) // DC chroma → table 1
-    dht(0x11, AcBitsCh, AcValsCh) // AC chroma → table 1
-    if (restartEvery > 0) { marker(0xdd); u16(4); u16(restartEvery) }
-    marker(0xda) // SOS: 3 components, luma tables 0/0, chroma 1/1
-    u16(6 + 2 * 3)
-    out.write(3)
-    out.write(1); out.write(0x00)
-    out.write(2); out.write(0x11)
-    out.write(3); out.write(0x11)
-    out.write(0); out.write(63); out.write(0)
+    out.write(SoiApp0)
+    out.write(dqtSegment(quantY, quantC)) // id 0 luma, 1 chroma
+    // SOF0: Y hSamp×vSamp with quant 0, Cb and Cr 1×1 with quant 1
+    out.write(sofSegment(0xc0, width, height,
+      Array(1, (hSamp << 4) | vSamp, 0, 2, 0x11, 1, 3, 0x11, 1)))
+    out.write(YcbcrDht)
+    if (restartEvery > 0) out.write(driSegment(restartEvery))
+    out.write(YcbcrSos)
     val bw = new BitWriter(out)
     val mcusX = (width + 8 * hSamp - 1) / (8 * hSamp)
     val mcusY = (height + 8 * vSamp - 1) / (8 * vSamp)
@@ -854,7 +848,7 @@ object Jpeg {
       while (mx < mcusX) {
         if (restartEvery > 0 && mcu > 0 && mcu % restartEvery == 0) {
           bw.flush()
-          marker(0xd0 + ((mcu / restartEvery - 1) % 8))
+          marker(out, 0xd0 + ((mcu / restartEvery - 1) % 8))
           predY = 0; predCb = 0; predCr = 0
         }
         var vy = 0 // the vSamp×hSamp luma blocks, raster order within the MCU
@@ -877,7 +871,7 @@ object Jpeg {
       my += 1
     }
     bw.flush()
-    marker(0xd9) // EOI
+    marker(out, 0xd9) // EOI
     out.toByteArray
   }
 
@@ -905,6 +899,27 @@ object Jpeg {
     def value(len: Int, code: Int): Int = vals(valPtr(len) + code - minCode(len))
     def inRange(len: Int, code: Int): Boolean =
       maxCode(len) >= 0 && code <= maxCode(len)
+  }
+
+  /** Decoder tables of the Huffman specs the encoders write, so that
+    * decoding their streams (every MJPEG frame) builds no table. */
+  private val KnownHuff: Array[(Array[Byte], HuffTable)] = Array(
+    DcSpec -> new HuffTable(DcBits, DcVals),
+    AcSpec -> new HuffTable(AcBits, AcVals),
+    DcSpecCh -> new HuffTable(DcBitsCh, DcValsCh),
+    AcSpecCh -> new HuffTable(AcBitsCh, AcValsCh),
+    FlatAcSpec -> new HuffTable(FlatAcBits, FlatAcVals))
+
+  /** The known table whose spec is `payload(at until at + n)`, else null. */
+  private def knownHuff(payload: Array[Byte], at: Int, n: Int): HuffTable = {
+    var i = 0
+    while (i < KnownHuff.length) {
+      val spec = KnownHuff(i)._1
+      if (java.util.Arrays.equals(payload, at, at + n, spec, 0, spec.length))
+        return KnownHuff(i)._2
+      i += 1
+    }
+    null
   }
 
   /** Entropy-segment bit reader: unstuffs 0xFF 00, surfaces RSTn and EOI
@@ -1286,17 +1301,20 @@ object Jpeg {
             require((tcTh >> 4) <= 1, s"Huffman table class ${tcTh >> 4} out of range")
             require((tcTh & 0x0f) < 4, s"Huffman table id ${tcTh & 0x0f} out of range")
             require(p + 17 <= pos + 2 + len, "truncated DHT segment")
-            val bits = new Array[Int](17)
             var total = 0
             var l = 1
-            while (l <= 16) {
-              bits(l) = payload(p + l) & 0xff; total += bits(l); l += 1
-            }
+            while (l <= 16) { total += payload(p + l) & 0xff; l += 1 }
             require(p + 17 + total <= pos + 2 + len, "truncated DHT segment")
-            val vals = new Array[Int](total)
-            var i = 0
-            while (i < total) { vals(i) = payload(p + 17 + i) & 0xff; i += 1 }
-            val t = new HuffTable(bits, vals)
+            val known = knownHuff(payload, p + 1, 16 + total)
+            val t = if (known != null) known else {
+              val bits = new Array[Int](17)
+              l = 1
+              while (l <= 16) { bits(l) = payload(p + l) & 0xff; l += 1 }
+              val vals = new Array[Int](total)
+              var i = 0
+              while (i < total) { vals(i) = payload(p + 17 + i) & 0xff; i += 1 }
+              new HuffTable(bits, vals)
+            }
             if ((tcTh >> 4) == 0) dcTabs(tcTh & 0x0f) = t
             else acTabs(tcTh & 0x0f) = t
             p += 17 + total
@@ -1400,14 +1418,19 @@ object Jpeg {
     }
     // DC-only fast path: the IDCT of a DC-only block is flat. The fill
     // value applies the SAME two cosTab multiplications the separable
-    // IDCT would (row pass then column pass), so the result is
-    // bit-identical to the general path — just without the 64 redundant
-    // per-sample sums.
-    def flatBlock(dequantDc: Double): Array[Double] = {
-      val flat = dequantDc * cosTab(0)(0) * cosTab(0)(0)
-      val a = new Array[Double](64)
-      java.util.Arrays.fill(a, flat)
-      a
+    // IDCT would (row pass then column pass) and the same level shift,
+    // rounding and clamp as [[writePixels]], so the result is
+    // bit-identical to the general path — computed once, not per sample.
+    def writeFlat(plane: Array[Byte], pw: Int, bx: Int, by: Int,
+        dequantDc: Double): Unit = {
+      val v = Math.round(dequantDc * cosTab(0)(0) * cosTab(0)(0) + 128.0)
+      val px = (if (v < 0) 0 else if (v > 255) 255 else v).toByte
+      var y = 0
+      while (y < 8) {
+        val rowBase = (by * 8 + y) * pw + bx * 8
+        java.util.Arrays.fill(plane, rowBase, rowBase + 8, px)
+        y += 1
+      }
     }
 
     if (progressive) {
@@ -1429,15 +1452,14 @@ object Jpeg {
             var hasAc = false
             var j = 1
             while (j < 64) { if (arr(base + j) != 0) hasAc = true; j += 1 }
-            val px =
-              if (hasAc) {
-                j = 0
-                while (j < 64) {
-                  coefD(j) = arr(base + j).toDouble * quant(j); j += 1
-                }
-                idct(coefD)
-              } else flatBlock(arr(base).toDouble * quant(0))
-            writePixels(planes(ci), planeW(ci), bx, by, px)
+            if (hasAc) {
+              j = 0
+              while (j < 64) {
+                coefD(j) = arr(base + j).toDouble * quant(j); j += 1
+              }
+              writePixels(planes(ci), planeW(ci), bx, by, idct(coefD))
+            } else
+              writeFlat(planes(ci), planeW(ci), bx, by, arr(base).toDouble * quant(0))
             bx += 1
           }
           by += 1
@@ -1478,8 +1500,8 @@ object Jpeg {
           k += 1
         }
       }
-      val px = if (hasAc) idct(coef) else flatBlock(coef(0))
-      writePixels(planes(ci), planeW(ci), bx, by, px)
+      if (hasAc) writePixels(planes(ci), planeW(ci), bx, by, idct(coef))
+      else writeFlat(planes(ci), planeW(ci), bx, by, coef(0))
     }
 
     var mcu = 0

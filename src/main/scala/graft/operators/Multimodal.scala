@@ -98,7 +98,7 @@ object Multimodal {
       require(w >= 1 && h >= 1 && w < (1 << 16) && h < (1 << 16),
         s"implausible dimensions ${w}x$h")
     if (payload.length >= 33 &&
-      (0 until 8).forall(i => (payload(i) & 0xff) == PngSignature(i))) {
+      (0 until 8).forall(i => payload(i) == PngSignature(i))) {
       require(tag(12) == "IHDR", "PNG missing leading IHDR")
       val w = be32(16); val h = be32(20)
       checkDims(w, h)
@@ -632,8 +632,8 @@ object Multimodal {
 
   // --- PNG: the compressed-image decode path --------------------------------
 
-  private val PngSignature: Array[Int] =
-    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a)
+  private val PngSignature: Array[Byte] =
+    Array(0x89, 0x50, 0x4e, 0x47, 0x0d, 0x0a, 0x1a, 0x0a).map(_.toByte)
 
   /** Paeth predictor (PNG spec §9, filter type 4): the tie-break order
     * (left, up, up-left) is normative — both codec sides share this. */
@@ -686,7 +686,7 @@ object Multimodal {
     while (!deflater.finished()) zbuf.write(tmp, 0, deflater.deflate(tmp))
     deflater.end()
     val out = new java.io.ByteArrayOutputStream()
-    PngSignature.foreach(out.write)
+    out.write(PngSignature)
     def be32(v: Long): Unit = {
       out.write(((v >>> 24) & 0xff).toInt); out.write(((v >>> 16) & 0xff).toInt)
       out.write(((v >>> 8) & 0xff).toInt); out.write((v & 0xff).toInt)
@@ -725,7 +725,7 @@ object Multimodal {
     * payload gated by `MultimodalSpec`. */
   def pngDecoder(payload: Array[Byte]): Array[Float] = {
     require(payload.length >= 8 &&
-      (0 until 8).forall(i => (payload(i) & 0xff) == PngSignature(i)),
+      (0 until 8).forall(i => payload(i) == PngSignature(i)),
       "not a PNG payload")
     def be32(i: Int): Long =
       ((payload(i) & 0xffL) << 24) | ((payload(i + 1) & 0xffL) << 16) |
@@ -1240,23 +1240,25 @@ object Multimodal {
     def u16(i: Int): Int = (payload(i) & 0xff) | ((payload(i + 1) & 0xff) << 8)
     def u32(i: Int): Long =
       (u16(i).toLong | (u16(i + 2).toLong << 16)) & 0xffffffffL
+    // tags compare as little-endian ints; the String is for messages only
     def tagAt(i: Int): String = new String(payload, i, 4,
       java.nio.charset.StandardCharsets.US_ASCII)
-    require(payload.length >= 12 && tagAt(0) == "RIFF" && tagAt(8) == "AVI ",
-      "not a RIFF/AVI payload")
+    require(payload.length >= 12 && u32(0).toInt == RiffTag &&
+      u32(8).toInt == AviTag, "not a RIFF/AVI payload")
     var width = -1
     var height = -1
     var mjpeg = false
-    val out = new scala.collection.mutable.ArrayBuilder.ofFloat
+    val sampled = new scala.collection.mutable.ArrayBuffer[SampledFrame]
+    var samples = 0L
     var frameIdx = 0
     def walk(from: Int, to: Int): Unit = {
       var pos = from
       while (pos + 8 <= to) {
-        val id = tagAt(pos)
+        val id = u32(pos).toInt
         val len = u32(pos + 4)
-        require(pos + 8 + len <= to, s"truncated chunk $id")
-        if (id == "LIST") walk(pos + 12, pos + 8 + len.toInt)
-        else if (id == "strf") {
+        require(pos + 8 + len <= to, s"truncated chunk ${tagAt(pos)}")
+        if (id == ListTag) walk(pos + 12, pos + 8 + len.toInt)
+        else if (id == StrfTag) {
           // the fields read below sit at data offsets 4..27 — a shorter
           // declared len would read bytes belonging to the next chunk
           require(len >= 28, "truncated strf chunk")
@@ -1271,37 +1273,21 @@ object Multimodal {
             f"unsupported biCompression 0x$compression%08x (DIB/MJPG only)")
           require(mjpeg || u16(pos + 22) == 24,
             "only 24bpp uncompressed DIB frames supported")
-        } else if (id == "00db" || id == "00dc") {
+        } else if (id == DibFrameTag || id == MjpegFrameTag) {
           require(width > 0, "frame chunk before the strf header")
-          if (mjpeg) {
-            if (frameIdx % every == 0) {
+          if (frameIdx % every == 0) {
+            if (mjpeg) {
               val (fw, fh, px) = Jpeg.decodeGray(
                 java.util.Arrays.copyOfRange(payload, pos + 8, pos + 8 + len.toInt))
               require(fw == width && fh == height,
                 s"frame is ${fw}x$fh, header says ${width}x$height")
-              var i = 0
-              while (i < px.length) {
-                out += (px(i) & 0xff) / 255.0f
-                i += 1
-              }
+              sampled += new SampledFrame(px, 0, width, height)
+            } else {
+              val rowBytes = (((24L * width + 31) / 32) * 4).toInt
+              require(rowBytes.toLong * height <= len, "truncated frame")
+              sampled += new SampledFrame(null, pos + 8, width, height)
             }
-          } else if (frameIdx % every == 0) {
-            val rowBytes = (((24L * width + 31) / 32) * 4).toInt
-            require(rowBytes.toLong * height <= len, "truncated frame")
-            val base = pos + 8
-            var y = 0
-            while (y < height) {
-              val row = base + (height - 1 - y) * rowBytes
-              var x = 0
-              while (x < width) {
-                val b = payload(row + 3 * x) & 0xff
-                val g = payload(row + 3 * x + 1) & 0xff
-                val r = payload(row + 3 * x + 2) & 0xff
-                out += (0.299f * r + 0.587f * g + 0.114f * b) / 255.0f
-                x += 1
-              }
-              y += 1
-            }
+            samples += width.toLong * height
           }
           frameIdx += 1
         }
@@ -1310,8 +1296,70 @@ object Multimodal {
     }
     walk(12, payload.length)
     require(frameIdx > 0, "no frames in the movi list")
-    out.result()
+    require(samples <= MaxArrayLength,
+      s"sampled frames hold $samples samples, more than one array can")
+    val out = new Array[Float](samples.toInt)
+    var o = 0
+    var k = 0
+    while (k < sampled.length) {
+      val f = sampled(k)
+      if (f.px != null) {
+        var i = 0
+        while (i < f.px.length) { out(o) = (f.px(i) & 0xff) / 255.0f; o += 1; i += 1 }
+      } else {
+        val rowBytes = ((24 * f.width + 31) / 32) * 4
+        var y = 0
+        while (y < f.height) {
+          val row = f.at + (f.height - 1 - y) * rowBytes
+          var x = 0
+          while (x < f.width) {
+            val b = payload(row + 3 * x) & 0xff
+            val g = payload(row + 3 * x + 1) & 0xff
+            val r = payload(row + 3 * x + 2) & 0xff
+            out(o) = (0.299f * r + 0.587f * g + 0.114f * b) / 255.0f
+            o += 1
+            x += 1
+          }
+          y += 1
+        }
+      }
+      k += 1
+    }
+    out
   }
+
+  private def fourcc(tag: String): Int =
+    tag(0) | (tag(1) << 8) | (tag(2) << 16) | (tag(3) << 24)
+  private val RiffTag = fourcc("RIFF")
+  private val AviTag = fourcc("AVI ")
+  private val ListTag = fourcc("LIST")
+  private val StrfTag = fourcc("strf")
+  private val DibFrameTag = fourcc("00db")
+  private val MjpegFrameTag = fourcc("00dc")
+
+  /** The largest array length every JVM allocates. */
+  private val MaxArrayLength = Int.MaxValue - 8
+
+  /** A frame [[aviFrameSampler]] keeps, held until the output is sized:
+    * its decoded MJPEG pixels, or (`px` null) the payload offset `at` of
+    * its DIB rows. */
+  private final class SampledFrame(val px: Array[Byte], val at: Int,
+      val width: Int, val height: Int)
+
+  /** The frames the `mm_video_mjpeg` rows encode from a raster whose
+    * length is a multiple of four ([[pngPixels]] gives a multiple of 16):
+    * one 16×16 frame per four pixels, each pixel a constant 8×8 block of
+    * the 2×2 grid. */
+  private[graft] def mjpegFrames(px: Array[Byte]): Seq[Array[Byte]] =
+    px.grouped(4).map { g =>
+      val frame = new Array[Byte](256)
+      var i = 0
+      while (i < 256) { // one 8-pixel run: block (row / 8, column / 8)
+        java.util.Arrays.fill(frame, i, i + 8, g((i / 128) * 2 + (i % 16) / 8))
+        i += 8
+      }
+      frame
+    }.toSeq
 
   private[operators] val PngWidth = 16
 
@@ -1619,13 +1667,7 @@ object Multimodal {
       .repartition(spark.sparkContext.defaultParallelism)
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .map { case (id, text) =>
-        val px = pngPixels(text) // length is a multiple of 16
-        val frames = px.grouped(4).map { g =>
-          Array.tabulate[Byte](256) { i =>
-            val yy = i / 16; val xx = i % 16
-            g((yy / 8) * 2 + (xx / 8))
-          }
-        }.toSeq
+        val frames = mjpegFrames(pngPixels(text))
         MediaRow(id, aviEncodeMjpeg(frames, 16, 16))
       }(enc).toDF()
     val decoded = decodeMedia(src, aviFrameSampler(FrameEvery))
@@ -1790,13 +1832,7 @@ object Multimodal {
       .repartition(spark.sparkContext.defaultParallelism)
       .as(Encoders.tuple(Encoders.scalaLong, Encoders.STRING))
       .map { case (id, text) =>
-        val px = pngPixels(text) // length is a multiple of 16
-        val frames = px.grouped(4).map { g =>
-          Array.tabulate[Byte](256) { i =>
-            val yy = i / 16; val xx = i % 16
-            g((yy / 8) * 2 + (xx / 8))
-          }
-        }.toSeq
+        val frames = mjpegFrames(pngPixels(text))
         val gray = aviFrameSampler(1)(aviEncodeMjpeg(frames, 16, 16))
         val fpx = 256
         val nf = gray.length / fpx

@@ -4,6 +4,7 @@ import java.io.FileNotFoundException
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.StructType
 
 /** Parquet table catalog over the driver fixtures (TESTDATA.md).
@@ -41,9 +42,11 @@ object Tables {
     *   - (path, length, modification time) of every leaf file, from one
     *     driver-side Hadoop `listFiles` — a table rewritten in place is
     *     inferred again;
-    *   - the session's set confs (`spark.conf.getAll`) — e.g.
-    *     `nanosAsLong` decides whether `events.ts` infers as long or
-    *     fails.
+    *   - the session's set confs whose value differs from the conf's
+    *     registered default — e.g. `nanosAsLong` decides whether
+    *     `events.ts` infers as long or fails. A conf set to its default
+    *     changes no inference, so restoring a saved value with
+    *     `spark.conf.set(k, <default>)` keeps hitting the same entry.
     * A path that cannot be listed is read uncached, so a missing table
     * raises Spark's own `PATH_NOT_FOUND` error as before. */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
@@ -82,9 +85,19 @@ object Tables {
       val it = fs.listFiles(qualified, true)
       val files = Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
         .map(f => (f.getPath.toString, f.getLen, f.getModificationTime)).toVector.sorted
-      Some(SchemaKey(qualified.toString, files, spark.conf.getAll))
+      Some(SchemaKey(qualified.toString, files, nonDefaultConfs(spark)))
     } catch { case _: FileNotFoundException => None }
   }
+
+  /** The set confs whose value is not their registered default; a conf
+    * without a registered SQL default is kept. */
+  private def nonDefaultConfs(spark: SparkSession): Map[String, String] =
+    spark.conf.getAll.filter { case (k, v) =>
+      scala.util.Try(DefaultConf.getConfString(k)).toOption.forall(_ != v)
+    }
+
+  /** A conf with nothing set: it reads every SQL conf's default. */
+  private val DefaultConf = new SQLConf
 
   /** Session configs every graft entry point needs.
     *   - `nanosAsLong`: the events fixture stores parquet INT64

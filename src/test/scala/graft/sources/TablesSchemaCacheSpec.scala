@@ -77,6 +77,18 @@ class TablesSchemaCacheSpec extends AnyFunSuite {
     assert(jobs == 0 && df.schema("b").dataType == BinaryType)
   }
 
+  test("a conf set to its default value starts no inference job") {
+    val key = "spark.sql.parquet.binaryAsString"
+    Tables.load(spark, dir, "part")
+    val saved = spark.conf.getAll.get(key)
+    try {
+      // the save/restore idiom `getOption` then `set` does exactly this
+      spark.conf.set(key, spark.conf.get(key))
+      assert(spark.conf.getAll.contains(key))
+      assert(jobsOf(spark)(Tables.load(spark, dir, "part"))._2 == 0)
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("a missing path raises the exception a plain parquet read raises") {
     val root = tempDir()
     val plain = intercept[Exception](spark.read.parquet(s"$root/none.parquet"))
