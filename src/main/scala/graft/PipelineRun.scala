@@ -27,7 +27,10 @@ import graft.sources.Tables
   * back on doc_id: four avoidable corpus-sized shuffles). Near-dup
   * removal lands as a broadcast ANTI join against the duplicate-LOSER id
   * frame ([[graft.operators.Dedup.nearDupLoserIds]], ∝ true duplicates —
-  * broadcastable by construction). The dedup window is the single wide
+  * broadcastable by construction). Cluster assignment runs when that
+  * frame is built: while the pair set fits the driver, the frame is a
+  * local relation of the union-find losers, so the curated plan carries
+  * no pair query and no rep join. The dedup window is the single wide
   * stage (32-byte md5 shuffle key), and it runs on the bounded-heap
   * top-k operator. `PipelineSpec` pins the behavioral invariants,
   * `PlanBudgetSpec` the 1-shuffle plan, and `pipeline_curated` is
@@ -42,8 +45,9 @@ object PipelineRun {
   def curated(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"), col("lang"), col("source"))
-    // near-dup losers: cluster the RAW corpus's LSH pair graph; every id
-    // that is not its cluster's min — a duplicate-proportional frame
+    // near-dup losers: cluster the RAW corpus's LSH pair graph (eagerly,
+    // here); every id that is not its cluster's min — a
+    // duplicate-proportional frame
     val losers = graft.operators.Dedup
       .nearDupLoserIds(docs.select(col("doc_id"), col("text")))
     // one projection computes every per-row stage (the registry's

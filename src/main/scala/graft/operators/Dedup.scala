@@ -55,8 +55,6 @@ object Dedup {
       .select((col("doc_id") + 200000L).as("doc_id"), col("text")))
   }
 
-  /** documents ∪ truncated (first ⌊9n/10⌋ words) copies of every 20th doc
-    * (keys shifted +100000). */
   /** The planted near-dup DELTA of any (doc_id, text) frame: every 20th
     * document, truncated to its first 90% of words, re-keyed at
     * doc_id + 100000. `private[graft]` so the streaming incremental twin
@@ -70,6 +68,8 @@ object Dedup {
         concat_ws(" ", slice(ws, lit(1), truncLen)).as("text"))
   }
 
+  /** documents ∪ truncated (first ⌊9n/10⌋ words) copies of every 20th doc
+    * (keys shifted +100000) — [[plantedDelta]] over the fixture. */
   private def withNearDups(spark: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
     d.unionAll(plantedDelta(d))
@@ -201,30 +201,27 @@ object Dedup {
     * candidates only. Output is identical to [[jaccardBrute]] whenever the
     * banding recalls every true pair (it does on the fixtures — verified
     * against the same DuckDB oracle), but the join is on (band, bandHash):
-    * candidate count scales with the number of true duplicates, not n². */
-  /** Registry form: the fixture corpus with planted near-duplicates. */
+    * candidate count scales with the number of true duplicates, not n².
+    * Registry form: the fixture corpus with planted near-duplicates. */
   def minhashLsh(spark: SparkSession, dir: String): DataFrame =
     minhashLshOn(withNearDups(spark, dir))
 
   /** Library form over ANY (doc_id, text) frame — e.g. the raw corpus
-    * inside [[graft.PipelineRun]]'s near-dedup stage. */
+    * inside [[graft.PipelineRun]]'s near-dedup stage.
+    *
+    * One lazy query: nothing is persisted and no eager `count()` job
+    * pins a cache. Spark's exchange reuse shares the repeated subtrees
+    * instead — the candidate shuffle feeds both the pair stream and the
+    * semi-join's id broadcast, one candidate-doc shingle broadcast serves
+    * both confirm joins, and a shuffled band self-join (a corpus too big
+    * to broadcast its 16 (band, hash) rows per doc) reads one band
+    * exchange on both sides. A broadcast band join on a small corpus
+    * computes the bands once per side, a cheaper pass there than the
+    * jobs a cache costs (at fixture scale the engine is job-bound). */
   def minhashLshOn(docs: DataFrame): DataFrame = {
-    // Persist the banded signatures: 16 (band, hash) rows of 3 longs per
-    // doc — tiny relative to the corpus at any scale — and the self-join
-    // below would otherwise evaluate the whole explode+sketch subtree once
-    // per side. (CacheManager dedups by canonicalized plan, so repeated
-    // calls share one entry; callers can `spark.catalog.clearCache()`.)
     val bands = bandHashes(docs)
       .select(col("doc_id"),
         posexplode(col("bands")).as(Seq("band", "bandHash")))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // MATERIALIZE before the self-join (round 17): AQE submits the two
-    // join-side exchanges as concurrent query stages, and a lazily
-    // persisted frame is not yet in cache when they race — both sides
-    // (and every later sibling stage) were measured re-running the full
-    // shingle+sketch subtree, ~10 redundant corpus passes per call. One
-    // eager count pins the cache first; everything after reads it.
-    bands.count()
     val cand = bands.as("x").join(bands.as("y"),
         col("x.band") === col("y.band") &&
           col("x.bandHash") === col("y.bandHash") &&
@@ -235,21 +232,15 @@ object Dedup {
     // candidate pair (a semi-join on the tiny candidate-id set, broadcast
     // because candidates ∝ true duplicates) — at 100 TB this re-reads a
     // pruned 2-column slice of the corpus for a few thousand docs instead
-    // of either persisting every document's shingle set or re-sh shingling
+    // of either persisting every document's shingle set or re-shingling
     // the full corpus twice.
     // LEFT-SEMI against the duplicate-bearing exploded id frame — semi
     // joins ignore build-side multiplicity, so no distinct (and no
     // shuffle) is spent deduplicating the candidate ids first
     val candIds = cand.select(explode(array(col("a_id"), col("b_id")))
       .as("doc_id"))
-    // persisted + materialized for the same reason as `bands`: the a/b
-    // confirm joins below materialize as concurrent AQE stages and would
-    // each re-shingle the candidate docs (and re-run the candidate
-    // self-join feeding the semi-join). Bounded: ∝ candidate pairs.
     val sh = withShingles(docs.join(broadcast(candIds),
       Seq("doc_id"), "leftsemi"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    sh.count()
     val jac = size(array_intersect(col("a_sh"), col("b_sh"))).cast("double") /
       size(array_union(col("a_sh"), col("b_sh"))).cast("double")
     (cand
@@ -297,10 +288,10 @@ object Dedup {
     * document reusing a history id can never be confirmed against the
     * wrong text.
     *
-    * Caching contract (same as [[minhashLshOn]]): the candidate frame is
-    * persisted because it feeds three consumers, and it must outlive this
-    * call — the returned DataFrame still references it lazily, so it
-    * cannot be unpersisted here. One-shot callers can leave it to
+    * Caching contract: the candidate frame is persisted because it
+    * feeds three consumers, and it must outlive this call — the
+    * returned DataFrame still references it lazily, so it cannot be
+    * unpersisted here. One-shot callers can leave it to
     * CacheManager (which dedups repeated calls by canonicalized plan) or
     * `spark.catalog.clearCache()` (Bench and Verify do); callers running
     * many batches in one session should use [[incrementalOnManaged]] and
@@ -326,8 +317,8 @@ object Dedup {
         posexplode(col("bands")).as(Seq("band", "bandHash")))
     // persisted: the candidate frame feeds BOTH per-side id derivations
     // and the verdict join — without it the corpus-sized band subtree
-    // evaluates once per consumer (same discipline as minhashLshOn's
-    // band frame; Bench/Verify clear the cache between queries)
+    // evaluates once per consumer (Bench/Verify clear the cache between
+    // queries)
     val cand = deltaBands.as("x").join(histBands.as("y"),
         col("x.band") === col("y.band") &&
           col("x.bandHash") === col("y.bandHash"))
@@ -412,11 +403,10 @@ object Dedup {
     * integer-exact in both engines, so the DuckDB oracle below replays the
     * identical algorithm and the result hash-matches. */
   def simhashPairs(spark: SparkSession, dir: String): DataFrame = {
-    // Persisted for the same reason as [[minhashLsh]]'s bands, and more so:
-    // this 5-longs-per-doc frame is referenced FOUR times below (both sides
-    // of the band self-join, then both sides of the hamming confirm), and
-    // its polynomial-hash subtree is the most expensive expression in the
-    // module.
+    // Persisted: this 5-longs-per-doc frame is referenced FOUR times below
+    // (both sides of the band self-join, then both sides of the hamming
+    // confirm), and its polynomial-hash subtree is the most expensive
+    // expression in the module.
     val bands = simhashBands(withNearDups(spark, dir))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val byBand = bands.select(col("doc_id"), posexplode(array(
@@ -497,20 +487,23 @@ object Dedup {
     * doc_id reachable through the [[minhashLsh]] pair graph; singletons
     * represent themselves) and the keep verdict.
     *
-    * Algorithm: iterative min-label propagation — labels start as own id;
-    * each round every node takes the min of its label and its neighbors'
-    * labels (one edges⋈labels shuffle join + groupBy per round), until a
-    * round changes nothing. The driver-side loop is bounded CONVERGENCE
-    * control (the per-round `count()` is an aggregate, not data
-    * movement) — the same shape GraphX/GraphFrames connected components
-    * use; rounds = cluster diameter, which for duplicate clusters is a
-    * small constant (LSH pairs most members directly). At 100 TB each
-    * round is one shuffle of the (tiny) edge list against the label
-    * frame; the fixpoint (min reachable id) is order-independent, so the
-    * result is deterministic under any partitioning and the DuckDB
-    * oracle replays it as a recursive transitive closure over the SAME
-    * pair set (brute-force Jaccard ≡ LSH pairs on the fixtures). */
-  /** Registry form: the planted corpus, with the corpus id frame
+    * Algorithm ([[componentReps]]): a pair set that fits under
+    * `spark.graft.cc.driverMaxPairs` is union-found on the driver;
+    * beyond it, iterative min-label propagation — labels start as own
+    * id; each round every node takes the min of its label and its
+    * neighbors' labels (one edges⋈labels shuffle join + groupBy per
+    * round), until a round changes nothing. The driver-side loop is
+    * bounded CONVERGENCE control (the per-round sum is an aggregate, not
+    * data movement) — the same shape GraphX/GraphFrames connected
+    * components use; rounds = cluster diameter, which for duplicate
+    * clusters is a small constant (LSH pairs most members directly). At
+    * 100 TB each round is one shuffle of the (tiny) edge list against the
+    * label frame; the fixpoint (min reachable id) is order-independent,
+    * so the result is deterministic under any partitioning and the
+    * DuckDB oracle replays it as a recursive transitive closure over the
+    * SAME pair set (brute-force Jaccard ≡ LSH pairs on the fixtures).
+    *
+    * Registry form: the planted corpus, with the corpus id frame
     * constructed arithmetically (original ids + planted +100000 copies of
     * every 20th) so it is provably a doc_id-only scan, never the
     * planted-text subtree. */
@@ -531,9 +524,21 @@ object Dedup {
     * complement, as an id frame ∝ TRUE DUPLICATES (never corpus size).
     * That bound is what lets a composed pipeline drop near-dups with a
     * broadcast ANTI join on the corpus scan instead of a corpus×corpus
-    * keeper join ([[graft.PipelineRun.curated]]). */
+    * keeper join ([[graft.PipelineRun.curated]]). Every loser is an
+    * endpoint of some pair, so the frame comes straight from the
+    * component reps (a driver-side local relation when the pairs fit
+    * there, else a filter over the propagation loop's labels) — the
+    * corpus is not scanned again to find them. */
   def nearDupLoserIds(docs: DataFrame): DataFrame =
-    clusterAssignOn(docs).filter(!col("is_keeper")).select(col("doc_id"))
+    componentReps(minhashLshOn(docs)) match {
+      case Left(reps) =>
+        val spark = docs.sparkSession
+        import spark.implicits._
+        reps.iterator.collect { case (id, rep) if id != rep => id }
+          .toSeq.toDF("doc_id")
+      case Right(labels) =>
+        labels.filter(col("doc_id") =!= col("label")).select(col("doc_id"))
+    }
 
   /** CTE chain over the RAW `documents` table (no planted duplicates)
     * yielding `keepers(doc_id)` — near-dup cluster representatives, the
@@ -609,13 +614,31 @@ object Dedup {
       pairs: Array[(Long, Long)]): Map[Long, Long] = unionFindReps(pairs)
 
   private def clusterAssignImpl(docs: DataFrame, pairs0: DataFrame): DataFrame = {
-    val tStart = System.nanoTime()
-    // persist the DIRECTED pair set before symmetrizing: the reversed
-    // union would otherwise embed the whole LSH+confirm subtree twice
+    val labels = componentReps(pairs0) match {
+      case Left(reps) =>
+        val spark = docs.sparkSession
+        import spark.implicits._
+        broadcast(reps.toSeq.toDF("doc_id", "label"))
+      case Right(converged) => converged
+    }
+    (docs.join(labels, Seq("doc_id"), "left")
+      .select(col("doc_id"),
+        coalesce(col("label"), col("doc_id")).as("cluster_rep"),
+        (col("doc_id") === coalesce(col("label"), col("doc_id")))
+          .as("is_keeper")))
+  }
+
+  /** Component representative (min reachable id) of every id incident to
+    * a pair of `pairs0(a_id, b_id)`. Left: the driver-side union-find
+    * reps, when the pair set fits under `spark.graft.cc.driverMaxPairs`.
+    * Right: the converged `(doc_id, label)` frame of the distributed
+    * propagation loop. Ids in no pair are in neither — they represent
+    * themselves. */
+  private def componentReps(
+      pairs0: DataFrame): Either[Map[Long, Long], DataFrame] = {
     val pairs = pairs0.select(col("a_id"), col("b_id"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val spark = docs.sparkSession
-    val driverMax = spark.conf.getOption("spark.graft.cc.driverMaxPairs")
+    val driverMax = pairs.sparkSession.conf
+      .getOption("spark.graft.cc.driverMaxPairs")
       .map(v => try v.trim.toLong catch {
         case _: NumberFormatException => throw new IllegalArgumentException(
           s"spark.graft.cc.driverMaxPairs must be a long, got '$v'")
@@ -623,22 +646,30 @@ object Dedup {
     // driverMax > 0 so that setting the conf to 0 really does force the
     // distributed loop even on an empty pair set (the equality spec's
     // mechanism for exercising both paths)
-    if (driverMax > 0 && pairs.count() <= driverMax) {
-      // small-graph fast path: skip the per-round job scheduling of the
-      // distributed loop (which dominates wall-clock when the duplicate
-      // graph is tiny) and union-find the collected pairs on the driver
-      val pairList = pairs.collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      pairs.unpersist()
-      val reps = unionFindReps(pairList)
-      import spark.implicits._
-      val labels = reps.toSeq.toDF("doc_id", "label")
-      return docs.join(broadcast(labels), Seq("doc_id"), "left")
-        .select(col("doc_id"),
-          coalesce(col("label"), col("doc_id")).as("cluster_rep"),
-          (col("doc_id") === coalesce(col("label"), col("doc_id")))
-            .as("is_keeper"))
+    // small-graph fast path: ONE bounded collect runs the pair query once
+    // and brings at most cap + 1 pairs to the driver — the extra row
+    // tells an overflow from an exact fit without a count() job — then
+    // union-find skips the distributed loop's per-round jobs
+    val fitting =
+      if (driverMax <= 0) None
+      else {
+        val cap = math.min(driverMax, Int.MaxValue - 1L).toInt
+        Some(pairs.limit(cap + 1).collect()).filter(_.length <= cap)
+      }
+    fitting match {
+      case Some(got) =>
+        Left(unionFindReps(got.map(r => (r.getLong(0), r.getLong(1)))))
+      case None =>
+        // persist the DIRECTED pair set before symmetrizing: the reversed
+        // union would otherwise embed the whole LSH+confirm subtree twice
+        Right(propagateLabels(pairs.persist(StorageLevel.MEMORY_AND_DISK)))
     }
+  }
+
+  /** The distributed min-label propagation over a persisted directed
+    * pair frame; releases `pairs` and returns the converged
+    * (persisted) `(doc_id, label)` frame. */
+  private def propagateLabels(pairs: DataFrame): DataFrame = {
     val edges = pairs.unionAll(
         pairs.select(col("b_id").as("a_id"), col("a_id").as("b_id")))
     // propagate over the EDGE-INDUCED subgraph only: nodes untouched by
@@ -662,15 +693,12 @@ object Dedup {
       // rounds needed = component diameter — a small constant for LSH
       // duplicate clusters (bands pair most members directly, so
       // components are near-cliques; the fixtures converge in 2 rounds)
-      val t0 = System.nanoTime()
       val updated = loopedEdges
         .join(labels, loopedEdges("b_id") === labels("doc_id"))
         .groupBy(col("a_id")).agg(min(col("label")).as("label"))
         .select(col("a_id").as("doc_id"), col("label"))
         .persist(StorageLevel.MEMORY_AND_DISK)
       val newSum = updated.agg(sum(col("label"))).head().getLong(0)
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(f"CC round $iter: sum=$newSum ${(System.nanoTime() - t0) / 1e9}%.2f s")
       converged = newSum == lastSum
       lastSum = newSum
       labels.unpersist()
@@ -678,15 +706,9 @@ object Dedup {
       iter += 1
     }
     require(converged, s"label propagation did not converge in $MaxCcIters rounds")
-    if (sys.env.contains("GRAFT_CC_DEBUG"))
-      println(f"CC loop done at ${(System.nanoTime() - tStart) / 1e9}%.2f s")
     pairs.unpersist()
     loopedEdges.unpersist()
-    (docs.join(labels, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("label"), col("doc_id")).as("cluster_rep"),
-        (col("doc_id") === coalesce(col("label"), col("doc_id")))
-          .as("is_keeper")))
+    labels
   }
 
   /** DuckDB replay: transitive closure (recursive CTE) over the SAME pair

@@ -1006,6 +1006,69 @@ object Jpeg {
 
   private def clamp255(v: Int): Int = if (v < 0) 0 else if (v > 255) 255 else v
 
+  /** A frame's sampling geometry, fixed at its first SOS: the MCU grid,
+    * each component's MCU-padded plane and actual data-unit grid, and
+    * (progressive only) the coefficient store every scan accumulates
+    * into. A class rather than vars of [[decode]], so the scan decoders
+    * read fields instead of `IntRef`/`ObjectRef` boxes. */
+  private final class Geometry(width: Int, height: Int,
+      val comps: Array[Component], progressive: Boolean) {
+    private val nc = comps.length
+    val hMax: Int = {
+      var m = 1; var i = 0
+      while (i < nc) { m = math.max(m, comps(i).h); i += 1 }
+      m
+    }
+    val vMax: Int = {
+      var m = 1; var i = 0
+      while (i < nc) { m = math.max(m, comps(i).v); i += 1 }
+      m
+    }
+    val mcusX: Int = (width + 8 * hMax - 1) / (8 * hMax)
+    val mcusY: Int = (height + 8 * vMax - 1) / (8 * vMax)
+    val planeW = new Array[Int](nc)
+    val planeH = new Array[Int](nc)
+    // non-interleaved progressive scans cover only the ACTUAL data
+    // units (ceil(compDim/8)), not the MCU-padded grid
+    val dataBX = new Array[Int](nc)
+    val dataBY = new Array[Int](nc)
+    locally {
+      var totalSamples = 0L
+      var i = 0
+      while (i < nc) {
+        val c = comps(i)
+        planeW(i) = mcusX * c.h * 8
+        planeH(i) = mcusY * c.v * 8
+        dataBX(i) = ((width * c.h + hMax - 1) / hMax + 7) / 8
+        dataBY(i) = ((height * c.v + vMax - 1) / vMax + 7) / 8
+        totalSamples += planeW(i).toLong * planeH(i).toLong
+        i += 1
+      }
+      // u16 dims can claim ~4.3e9 px from a 20-byte header — cap BEFORE
+      // allocating, in Long so the product cannot wrap into a
+      // NegativeArraySizeException. The cap bounds TOTAL samples across
+      // all component planes (a crafted 3-component header otherwise
+      // allocates ~3-6× the grayscale bound), so color payloads get the
+      // same absolute memory ceiling as grayscale. Progressive holds
+      // every coefficient in memory (4 B/sample/component), so its cap
+      // is tighter than the baseline streaming path's.
+      require(totalSamples <= (if (progressive) 1L << 26 else 1L << 28),
+        s"decoded image too large: ${width}x$height, " +
+          s"$nc component(s), $totalSamples plane samples")
+    }
+    val coefs: Array[Array[Int]] =
+      if (!progressive) null
+      else {
+        val cs = new Array[Array[Int]](nc)
+        var i = 0
+        while (i < nc) {
+          cs(i) = new Array[Int]((planeW(i) / 8) * (planeH(i) / 8) * 64)
+          i += 1
+        }
+        cs
+      }
+  }
+
   /** The general decoder both fronts share → (width, height, component
     * count, pixels): grayscale bytes for one component, interleaved
     * JFIF-converted RGB for three. Handles BASELINE (SOF0: one
@@ -1038,62 +1101,30 @@ object Jpeg {
     var scanCount = 0
 
     // sizing + progressive coefficient state, computed at the first SOS
-    var hMax = 1; var vMax = 1; var mcusX = 0; var mcusY = 0
-    var planeW: Array[Int] = null
-    var planeH: Array[Int] = null
-    var dataBX: Array[Int] = null
-    var dataBY: Array[Int] = null
-    var coefs: Array[Array[Int]] = null
+    var geo: Geometry = null
     val progPreds = new Array[Int](4)
-    def ensureSized(): Unit = if (planeW == null) {
-      require(width > 0 && comps != null, "SOS before SOF")
-      hMax = comps.map(_.h).max
-      vMax = comps.map(_.v).max
-      mcusX = (width + 8 * hMax - 1) / (8 * hMax)
-      mcusY = (height + 8 * vMax - 1) / (8 * vMax)
-      planeW = comps.map(c => mcusX * c.h * 8)
-      planeH = comps.map(c => mcusY * c.v * 8)
-      // u16 dims can claim ~4.3e9 px from a 20-byte header — cap BEFORE
-      // allocating, in Long so the product cannot wrap into a
-      // NegativeArraySizeException. The cap bounds TOTAL samples across
-      // all component planes (a crafted 3-component header otherwise
-      // allocates ~3-6× the grayscale bound), so color payloads get the
-      // same absolute memory ceiling as grayscale. Progressive holds
-      // every coefficient in memory (4 B/sample/component), so its cap
-      // is tighter than the baseline streaming path's.
-      val totalSamples =
-        comps.indices.map(i => planeW(i).toLong * planeH(i).toLong).sum
-      require(totalSamples <= (if (progressive) 1L << 26 else 1L << 28),
-        s"decoded image too large: ${width}x$height, " +
-          s"${comps.length} component(s), $totalSamples plane samples")
-      // non-interleaved progressive scans cover only the ACTUAL data
-      // units (ceil(compDim/8)), not the MCU-padded grid
-      dataBX = comps.map(c => ((width * c.h + hMax - 1) / hMax + 7) / 8)
-      dataBY = comps.map(c => ((height * c.v + vMax - 1) / vMax + 7) / 8)
-      if (progressive)
-        coefs = Array.tabulate(comps.length)(i =>
-          new Array[Int]((planeW(i) / 8) * (planeH(i) / 8) * 64))
-    }
 
     /** Decode one progressive scan's entropy data; returns the payload
       * position of the next marker (resynced past stuffing and stray
       * RSTn). */
-    def decodeProgScan(scanComps: Array[Int], ss: Int, se: Int, ah: Int,
-        al: Int, entryPos: Int): Int = {
+    def decodeProgScan(g: Geometry, restartEvery: Int, scanComps: Array[Int],
+        ss: Int, se: Int, ah: Int, al: Int, entryPos: Int): Int = {
+      val comps = g.comps
+      val coefs = g.coefs
       val br = new BitReader(payload, entryPos)
       var eobrun = 0
       java.util.Arrays.fill(progPreds, 0)
       var restartCount = 0
       var unit = 0
       def maybeRestart(): Unit =
-        if (restartInterval > 0 && unit > 0 && unit % restartInterval == 0) {
+        if (restartEvery > 0 && unit > 0 && unit % restartEvery == 0) {
           br.consumeRestart(restartCount % 8)
           restartCount += 1
           java.util.Arrays.fill(progPreds, 0)
           eobrun = 0
         }
       def blockBase(ci: Int, bx: Int, by: Int): Int =
-        (by * (planeW(ci) / 8) + bx) * 64
+        (by * (g.planeW(ci) / 8) + bx) * 64
 
       def dcFirst(ci: Int, base: Int): Unit = {
         val s = br.decodeHuff(dcTabs(comps(ci).dcId))
@@ -1179,9 +1210,9 @@ object Jpeg {
 
       if (scanComps.length > 1) { // interleaved: DC scans only
         var my = 0
-        while (my < mcusY) {
+        while (my < g.mcusY) {
           var mx = 0
-          while (mx < mcusX) {
+          while (mx < g.mcusX) {
             maybeRestart()
             var i = 0
             while (i < scanComps.length) {
@@ -1207,9 +1238,9 @@ object Jpeg {
       } else { // non-interleaved: the component's own data-unit grid
         val ci = scanComps(0)
         var by = 0
-        while (by < dataBY(ci)) {
+        while (by < g.dataBY(ci)) {
           var bx = 0
-          while (bx < dataBX(ci)) {
+          while (bx < g.dataBX(ci)) {
             maybeRestart()
             val base = blockBase(ci, bx, by)
             if (ss == 0) { if (ah == 0) dcFirst(ci, base) else dcRefine(ci, base) }
@@ -1239,11 +1270,11 @@ object Jpeg {
 
     while (sosAt < 0 && !eoi) {
       require(pos + 2 <= payload.length, "truncated marker stream")
-      require((payload(pos) & 0xff) == 0xff,
-        f"expected marker, got 0x${payload(pos) & 0xff}%02x")
+      val lead = payload(pos) & 0xff
+      require(lead == 0xff, f"expected marker, got 0x$lead%02x")
       val m = payload(pos + 1) & 0xff
       if (m == 0xd9) { // EOI terminates the progressive scan sequence
-        require(progressive && coefs != null, "EOI before any image scan")
+        require(progressive && geo != null, "EOI before any image scan")
         eoi = true
         pos += 2
       } else {
@@ -1280,7 +1311,9 @@ object Jpeg {
           require(nc == 1 || nc == 3,
             s"unsupported component count $nc (grayscale or YCbCr expected)")
           require(len >= 8 + 3 * nc, "truncated SOF0 segment")
-          comps = Array.tabulate(nc) { i =>
+          val cs = new Array[Component](nc)
+          var i = 0
+          while (i < nc) {
             val o = seg + 6 + 3 * i
             val hv = payload(o + 1) & 0xff
             val sh = hv >> 4
@@ -1289,8 +1322,10 @@ object Jpeg {
               s"unsupported sampling factor ${sh}x$sv")
             val qId = payload(o + 2) & 0x0f
             require(qId < 4, s"quant table id $qId out of range")
-            new Component(payload(o) & 0xff, sh, sv, qId)
+            cs(i) = new Component(payload(o) & 0xff, sh, sv, qId)
+            i += 1
           }
+          comps = cs
           if (nc == 1)
             require(comps(0).h == 1 && comps(0).v == 1,
               "subsampling not applicable to one component")
@@ -1377,16 +1412,19 @@ object Jpeg {
           // approximation levels), so 64 is generous
           scanCount += 1
           require(scanCount <= 64, "too many progressive scans")
-          ensureSized()
-          scanComps.foreach { ciI =>
-            val c = comps(ciI)
+          if (geo == null) geo = new Geometry(width, height, comps, progressive)
+          i = 0
+          while (i < ns) {
+            val c = comps(scanComps(i))
             if (ss == 0 && ah == 0)
               require(dcTabs(c.dcId) != null, "missing Huffman tables")
             if (ss > 0)
               require(acTabs(c.acId) != null, "missing Huffman tables")
             require(quants(c.qId) != null, s"missing quant table ${c.qId}")
+            i += 1
           }
-          nextPos = decodeProgScan(scanComps, ss, se, ah, al, pos + 2 + len)
+          nextPos = decodeProgScan(geo, restartInterval, scanComps, ss, se,
+            ah, al, pos + 2 + len)
         case x if x >= 0xe0 && x <= 0xef => () // APPn
         case 0xfe => () // COM
         case other => throw new IllegalArgumentException(
@@ -1397,9 +1435,18 @@ object Jpeg {
     }
     require(width > 0 && comps != null, "missing SOF0")
     val nc = comps.length
-    ensureSized()
+    if (geo == null) geo = new Geometry(width, height, comps, progressive)
+    val geom = geo
+    val planeW = geom.planeW
     // per-component planes on the MCU-padded grid; cropped at assembly
-    val planes = Array.tabulate(nc)(i => new Array[Byte](planeW(i) * planeH(i)))
+    val planes = new Array[Array[Byte]](nc)
+    locally {
+      var i = 0
+      while (i < nc) {
+        planes(i) = new Array[Byte](planeW(i) * geom.planeH(i))
+        i += 1
+      }
+    }
 
     def writePixels(plane: Array[Byte], pw: Int, bx: Int, by: Int,
         px: Array[Double]): Unit = {
@@ -1439,11 +1486,12 @@ object Jpeg {
       val coefD = new Array[Double](64)
       var ci = 0
       while (ci < nc) {
-        val quant = quants(comps(ci).qId)
-        require(quant != null, s"missing quant table ${comps(ci).qId}")
-        val arr = coefs(ci)
+        val qId = comps(ci).qId
+        val quant = quants(qId)
+        require(quant != null, s"missing quant table $qId")
+        val arr = geom.coefs(ci)
         val bw = planeW(ci) / 8
-        val bh = planeH(ci) / 8
+        val bh = geom.planeH(ci) / 8
         var by = 0
         while (by < bh) {
           var bx = 0
@@ -1467,17 +1515,22 @@ object Jpeg {
         ci += 1
       }
     } else {
-    comps.foreach { c =>
-      require(quants(c.qId) != null, s"missing quant table ${c.qId}")
-      require(c.dcId >= 0 && dcTabs(c.dcId) != null && acTabs(c.acId) != null,
-        "missing Huffman tables")
+    locally {
+      var i = 0
+      while (i < nc) {
+        val c = comps(i)
+        require(quants(c.qId) != null, s"missing quant table ${c.qId}")
+        require(c.dcId >= 0 && dcTabs(c.dcId) != null && acTabs(c.acId) != null,
+          "missing Huffman tables")
+        i += 1
+      }
     }
     val br = new BitReader(payload, sosAt)
     val coef = new Array[Double](64)
     val preds = new Array[Int](nc)
 
     def decodeBlock(ci: Int, bx: Int, by: Int): Unit = {
-      val c = comps(ci)
+      val c = geom.comps(ci)
       val quant = quants(c.qId)
       val acTab = acTabs(c.acId)
       java.util.Arrays.fill(coef, 0.0)
@@ -1507,9 +1560,9 @@ object Jpeg {
     var mcu = 0
     var restartCount = 0
     var my = 0
-    while (my < mcusY) {
+    while (my < geom.mcusY) {
       var mx = 0
-      while (mx < mcusX) {
+      while (mx < geom.mcusX) {
         if (restartInterval > 0 && mcu > 0 && mcu % restartInterval == 0) {
           br.consumeRestart(restartCount % 8)
           restartCount += 1
@@ -1517,7 +1570,7 @@ object Jpeg {
         }
         var ci = 0 // interleaved: each component's v×h block grid in turn
         while (ci < nc) {
-          val c = comps(ci)
+          val c = geom.comps(ci)
           var vy = 0
           while (vy < c.v) {
             var hx = 0
@@ -1553,14 +1606,14 @@ object Jpeg {
       var o = 0
       var y = 0
       while (y < height) {
-        val rY = (y * cY.v / vMax) * planeW(0)
-        val rCb = (y * cCb.v / vMax) * planeW(1)
-        val rCr = (y * cCr.v / vMax) * planeW(2)
+        val rY = (y * cY.v / geom.vMax) * planeW(0)
+        val rCb = (y * cCb.v / geom.vMax) * planeW(1)
+        val rCr = (y * cCr.v / geom.vMax) * planeW(2)
         var x = 0
         while (x < width) {
-          val yd = (planes(0)(rY + x * cY.h / hMax) & 0xff).toDouble
-          val cb = planes(1)(rCb + x * cCb.h / hMax) & 0xff
-          val cr = planes(2)(rCr + x * cCr.h / hMax) & 0xff
+          val yd = (planes(0)(rY + x * cY.h / geom.hMax) & 0xff).toDouble
+          val cb = planes(1)(rCb + x * cCb.h / geom.hMax) & 0xff
+          val cr = planes(2)(rCr + x * cCr.h / geom.hMax) & 0xff
           val r = math.floor(yd + 1.402 * (cr - 128) + 0.5).toInt
           val g = math.floor(
             yd - 0.344136 * (cb - 128) - 0.714136 * (cr - 128) + 0.5).toInt

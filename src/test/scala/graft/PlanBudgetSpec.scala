@@ -52,10 +52,8 @@ class PlanBudgetSpec extends AnyFunSuite {
     // the baseline's nested-loop cartesian (one task per split otherwise)
     "dedup_jaccard_brute" -> (1, 1),
     // semi-join candidate pruning (no id distinct)
-    // r17: bands are persisted AND materialized before the self-join,
-    // so the planner sees the tiny cached relation's stats and
-    // broadcasts one more side (5 -> 6 broadcasts, shuffles unchanged)
-    "dedup_minhash_lsh" -> (2, 6),
+    // lazy pair query: no cached-band stats adding a broadcast (6 -> 5)
+    "dedup_minhash_lsh" -> (2, 5),
     "dedup_semantic" -> (0, 1), // same eager-CC shape as dedup_clusters
     "dedup_simhash" -> (1, 3),
     // r17: covered word-indices aggregate to a per-doc SET (∝ duplicated
@@ -99,7 +97,8 @@ class PlanBudgetSpec extends AnyFunSuite {
     "mm_resize" -> (0, 0),
     // single-scan projection; dedup window is the only shuffle, near-dup
     // drop is a broadcast anti join on the loser-id frame
-    "pipeline_curated" -> (1, 2),
+    // the loser ids are a driver-side local relation: no rep join (2 -> 1)
+    "pipeline_curated" -> (1, 1),
     // the lineage variant composes three more stage families on top of
     // the curated shape, each shuffle inherent to its stage and none
     // super-linear: the excision machinery (positions/ownership/word

@@ -180,6 +180,33 @@ class DedupSpec extends AnyFunSuite {
     assert(viaDriver.exists { case (id, (rep, _)) => rep != id })
   }
 
+  test("an overflowing bounded collect falls back to the distributed loop") {
+    // driverMaxPairs = 1: the bounded collect brings 2 pairs back, more
+    // than fit, so the pairs are persisted and propagated distributedly —
+    // clusters and loser ids must equal the default driver path's
+    import org.apache.spark.sql.functions.col
+    val raw = graft.sources.Tables.documents(spark, TestSpark.sfDir)
+      .select(col("doc_id"), col("text"))
+    val docs = raw.unionAll(Dedup.plantedDelta(raw))
+    def run(): (Map[Long, (Long, Boolean)], Set[Long]) = {
+      val clusters = Dedup.clusterAssignOn(docs).collect()
+        .map(r => r.getLong(0) -> ((r.getLong(1), r.getBoolean(2)))).toMap
+      val losers = Dedup.nearDupLoserIds(docs).collect().map(_.getLong(0))
+      assert(losers.length == losers.distinct.length)
+      (clusters, losers.toSet)
+    }
+    assert(Dedup.minhashLshOn(docs).count() > 1) // so 1 pair overflows
+    val viaDriver = run()
+    spark.conf.set("spark.graft.cc.driverMaxPairs", "1")
+    val viaLoop = try run()
+      finally spark.conf.unset("spark.graft.cc.driverMaxPairs")
+    spark.catalog.clearCache()
+    assert(viaDriver._2.nonEmpty)
+    assert(viaLoop == viaDriver)
+    // the loser ids are exactly the non-keepers of the cluster assignment
+    assert(viaDriver._2 == viaDriver._1.collect { case (id, (_, false)) => id }.toSet)
+  }
+
   test("simhash pairs identical docs (hamming 0) and isolates unrelated ones") {
     // identical texts ⇒ identical shingle sets ⇒ hamming exactly 0; on a
     // 13-token doc a one-word difference flips an EXPECTED ~8 of 64 bits,

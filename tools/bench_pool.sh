@@ -39,18 +39,24 @@ if ps -ef | grep "[g]raft.Bench" > /dev/null; then
   exit 1
 fi
 
+# Sized from the host the way Tier-1 verify and perfbench/run.py size
+# their sessions: one Spark core per CPU, and an explicit heap of half the
+# RAM clamped to 2..8 GiB (the default 25% of RAM OOM'd one 30x iteration
+# of sim_ann_lsh_index_query in r16; an explicit bound also keeps sessions
+# comparable). bench_merge.py keys each pool on the core count.
+CPUS="$(env -u OMP_NUM_THREADS nproc)"
+HEAP="$(awk '/^MemTotal:/ {g = int($2 / 2097152)}
+  END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' 2>/dev/null </proc/meminfo \
+  || echo 2g)"
+
 ok=0
 failed=0
 for i in $(seq 1 "$N"); do
-  echo "[pool] session $i/$N sf=$SF runs=$RUNS warmup=$WARM"
-  # -Xmx100g: the default heap (25% of RAM = 32 GiB) OOM'd one 30x
-  # iteration of sim_ann_lsh_index_query (r16) — scaled probe joins at
-  # local[32] need headroom; an explicit bound also makes sessions
-  # comparable across hosts
-  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS=32 \
+  echo "[pool] session $i/$N sf=$SF runs=$RUNS warmup=$WARM cpus=$CPUS heap=$HEAP"
+  SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="$CPUS" \
   SPARK_GRAFT_BENCH_RUNS="$RUNS" SPARK_GRAFT_BENCH_OUT="$OUT" \
   SPARK_GRAFT_WARMUP_SF_DIR="$WARM" \
-  java -Xmx100g -cp "target/scala-2.13/classes:/opt/spark/jars/*" $JAVA_OPTS \
+  java "-Xmx$HEAP" -cp "target/scala-2.13/classes:/opt/spark/jars/*" $JAVA_OPTS \
     graft.Bench > /dev/null
   rc=$?
   if [ $rc -ne 0 ]; then
