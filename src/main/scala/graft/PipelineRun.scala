@@ -21,7 +21,9 @@ import graft.sources.Tables
   *   6. one parquet write partitioned by split
   *
   * Composition shape (the 100 TB story): stages 1, 2, 4's key and 5 are
-  * ALL per-row expressions over `text`, so they ride ONE corpus scan as
+  * ALL per-row expressions over `text` — the native `quality_keep`,
+  * `pii_mask`, `norm_text` and `poly_hash` kernels of `graft.functions`,
+  * each one pass over the row's bytes — so they ride ONE corpus scan as
   * one codegen'd projection — no self-joins re-reading the corpus per
   * stage (the previous form joined four derived frames of the same scan
   * back on doc_id: four avoidable corpus-sized shuffles). Near-dup

@@ -112,8 +112,25 @@ object PolyHash {
   /** The default base-31 hash ([[WinnowFingerprints]]' shingle hash). */
   def compute(str: UTF8String): Long = compute(str, 31)
 
-  /** Static so generated code can call it. */
+  /** Static so generated code can call it. An all-ASCII row folds its
+    * bytes (each byte is its code point); a row holding a byte >= 0x80
+    * folds the code points of its decoded string. */
   def compute(str: UTF8String, base: Int): Long = {
+    val n = str.numBytes
+    var acc = 0L
+    var i = 0
+    while (i < n) {
+      val b = str.getByte(i)
+      if (b < 0) return computeDecoded(str, base)
+      acc = (acc * base + b) % M
+      i += 1
+    }
+    acc
+  }
+
+  /** The fold over the decoded string's code points (invalid UTF-8
+    * decodes to U+FFFD, as in `toString`). */
+  private[graft] def computeDecoded(str: UTF8String, base: Int): Long = {
     val s = str.toString
     var acc = 0L
     var i = 0
@@ -349,6 +366,18 @@ object StringFunctions {
     * independent hash of the HLL bucket key). */
   def poly_hash_base(c: Column, base: Int): Column =
     ColumnBridge.column(PolyHash(ColumnBridge.expression(c), base))
+
+  /** Column-API entry point for [[NormText]]. */
+  def norm_text(c: Column): Column =
+    ColumnBridge.column(NormText(ColumnBridge.expression(c)))
+
+  /** Column-API entry point for [[QualityKeep]]. */
+  def quality_keep(c: Column): Column =
+    ColumnBridge.column(QualityKeep(ColumnBridge.expression(c)))
+
+  /** Column-API entry point for [[PiiMask]]. */
+  def pii_mask(c: Column): Column =
+    ColumnBridge.column(PiiMask(ColumnBridge.expression(c)))
 
   /** Column-API entry point for [[CodepointHistogram]]. */
   def codepoint_histogram(c: Column, bins: Int): Column =

@@ -11,8 +11,9 @@ import graft.sources.Tables
   * language ID, and document fingerprinting (md5 + Karp-Rabin-style
   * polynomial rolling hash).
   *
-  * Every expression here is codegen'd built-ins (`functions._` — no UDFs),
-  * and every query has a DuckDB oracle: the arithmetic is written so the
+  * Every expression here is a codegen'd built-in (`functions._`) or a
+  * native `graft.functions` expression — no UDFs — and every query has a
+  * DuckDB oracle: the arithmetic is written so the
   * same formula evaluates bit-identically in both engines (integer counts,
   * double division in a fixed order, left-fold hashing in index order).
   *
@@ -31,7 +32,7 @@ object TextAnalysis {
     size(filter(toks, w => words.map(w === lit(_)).reduce(_ || _)))
 
   // Marker stopwords per language for the n-gram/stopword heuristic.
-  private val EnWords = Seq("the", "a", "of", "is", "and")
+  private val EnWords = graft.functions.QualityKeep.Stopwords
   private val FrWords = Seq("le", "la", "les", "et", "un")
   private val DeWords = Seq("der", "die", "und", "ein", "ist")
   private val EsWords = Seq("el", "los", "y", "una", "es")
@@ -952,20 +953,20 @@ object TextAnalysis {
 
   /** Text normalization — the canonical cleaning step before hashing or
     * tokenization: lowercase, strip non-alphanumerics (keeping spaces),
-    * collapse whitespace runs, trim. Pure regexp_replace chains with
-    * literal character classes, so Java and RE2 agree; single-pass,
-    * scan-only. */
+    * collapse whitespace runs, trim. One native pass per row
+    * ([[graft.functions.NormText]]); the oracle replays it as a
+    * regexp_replace chain with literal character classes, so Java and
+    * RE2 agree. Scan-only. */
   def normalize(spark: SparkSession, dir: String): DataFrame =
     (Tables.documents(spark, dir)
       .select(col("doc_id"), normalizedExpr.as("norm_text"),
         length(normalizedExpr).cast("long").as("n_norm_chars")))
 
-  /** The normalization chain as a per-row Column over `text` — shared by
+  /** The normalization as a per-row Column over `text` — shared by
     * [[normalize]] and the batch/streaming curation compositions so the
     * twins agree by construction. */
   val normalizedExpr: Column =
-    trim(regexp_replace(
-      regexp_replace(lower(col("text")), "[^a-z0-9 ]", ""), "  +", " "))
+    graft.functions.StringFunctions.norm_text(col("text"))
 
   /** The normalization chain as a SQL fragment over a `text` column —
     * shared by [[normalizeOracle]] and the composed pipeline oracle. */
@@ -1019,7 +1020,11 @@ object TextAnalysis {
     * presence — plus the resulting keep verdict. All integer/double
     * arithmetic in a fixed order, so both engines agree exactly. */
   def qualityRules(spark: SparkSession, dir: String): DataFrame =
-    (Tables.documents(spark, dir)
+    qualityRulesOn(Tables.documents(spark, dir))
+
+  /** [[qualityRules]] over any (doc_id, text) frame. */
+  def qualityRulesOn(df: DataFrame): DataFrame =
+    (df
       .select(col("doc_id"),
         qualityOkLen.as("ok_len"), qualityOkWordLen.as("ok_word_len"),
         qualityOkSymbols.as("ok_symbols"), qualityHasStopword.as("has_stopword"),
@@ -1038,9 +1043,11 @@ object TextAnalysis {
   private def qualityHasStopword: Column = countIn(EnWords) >= 1
 
   /** The full keep verdict as a per-row Column over `text` — shared by
-    * [[qualityRules]] and the batch/streaming curation compositions. */
+    * [[qualityRules]] and the batch/streaming curation compositions. One
+    * native pass ([[graft.functions.QualityKeep]]) computing the
+    * conjunction of the four component columns above. */
   val qualityKeepExpr: Column =
-    qualityOkLen && qualityOkWordLen && qualityOkSymbols && qualityHasStopword
+    graft.functions.StringFunctions.quality_keep(col("text"))
 
   /** The keep verdict as a SQL fragment over a `text` column — shared by
     * [[qualityRulesOracle]] and the composed pipeline oracle
@@ -1073,27 +1080,18 @@ object TextAnalysis {
   }
 
   /** The PII pattern bundle — ordered (regex, replacement) pairs applied
-    * as a regexp_replace chain. Literal character classes and bounded
-    * quantifiers only, so Java regex and DuckDB's RE2 rewrite
-    * identically. Order matters: emails go first (their local parts can
-    * contain digits), structured digit shapes (SSN, separator-tolerant
-    * phone) before the bare 8+-digit-run catch-all would swallow their
-    * digit groups. Callers can pass their own bundle to [[piiMaskOn]] —
-    * the chain shape (and the oracle replay guarantee, for literal-class
-    * patterns) is independent of the bundle. */
-  val DefaultPiiPatterns: Seq[(String, String)] = Seq(
-    "[a-zA-Z0-9._%+-]+@[a-zA-Z0-9.-]+\\.[a-zA-Z]+" -> "<EMAIL>",
-    "[0-9]{3}-[0-9]{2}-[0-9]{4}" -> "<SSN>",
-    "\\(?[0-9]{3}\\)?[-. ][0-9]{3}[-. ][0-9]{4}" -> "<PHONE>",
-    "[0-9]{8,}" -> "<NUM>")
+    * as a regexp_replace chain ([[graft.functions.PiiMask.Patterns]],
+    * where the order is explained). Callers can pass their own bundle to
+    * [[piiMaskOn]] — the chain shape (and the oracle replay guarantee,
+    * for literal-class patterns) is independent of the bundle. */
+  val DefaultPiiPatterns: Seq[(String, String)] = graft.functions.PiiMask.Patterns
 
-  /** The default mask chain as a per-row Column over `text` — shared by
+  /** The default mask as a per-row Column over `text` — shared by
     * [[piiMaskOn]] and the composed curation pipeline's single-scan
-    * projection. */
+    * projection. One native kernel ([[graft.functions.PiiMask]]) that
+    * skips the regex chain on rows no pattern can match. */
   private[graft] val piiMaskedExpr: Column =
-    DefaultPiiPatterns.foldLeft(col("text")) {
-      case (c, (re, rep)) => regexp_replace(c, re, rep)
-    }
+    graft.functions.StringFunctions.pii_mask(col("text"))
 
   /** Its DuckDB replay, as a fragment over a `text` column. */
   private[graft] val piiMaskedSql: String =
@@ -1103,7 +1101,8 @@ object TextAnalysis {
 
   /** PII masking over any (doc_id, text) frame — the sanitization pass
     * before a corpus leaves the pipeline. Single-pass scan, no shuffle;
-    * the whole chain stays one codegen'd projection. */
+    * the default bundle runs as the native [[graft.functions.PiiMask]]
+    * kernel, a custom bundle as a regexp_replace chain. */
   def piiMaskOn(df: DataFrame,
       patterns: Seq[(String, String)] = DefaultPiiPatterns): DataFrame = {
     val masked =

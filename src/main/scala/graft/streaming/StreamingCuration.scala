@@ -14,7 +14,7 @@ import graft.operators.TextAnalysis
   * Batch and stream share ONE composition ([[curationOf]]) built from
   * the same Column expressions the oracle-gated operators use
   * (`TextAnalysis.qualityKeepExpr` / `normalizedExpr` / `splitExpr` /
-  * the `DefaultPiiPatterns` mask chain), so the twins cannot drift — the
+  * `piiMaskedExpr`), so the twins cannot drift — the
   * only genuinely streaming piece is the stateful keep-FIRST-ARRIVAL
   * dedup (`dropDuplicates` on the normalized-text hash): which doc
   * SURVIVES a duplicate set is arrival-order-dependent, the set of
@@ -40,12 +40,9 @@ object StreamingCuration {
     * pipeline is one codegen'd scan stage, no shuffle) feeding one
     * stateful dedup on the 32-byte content key. */
   def curationOf(docs: DataFrame): DataFrame = {
-    val maskedText = TextAnalysis.DefaultPiiPatterns.foldLeft(col("text")) {
-      case (c, (re, rep)) => regexp_replace(c, re, rep)
-    }
     docs.filter(TextAnalysis.qualityKeepExpr)
       .select(col("doc_id"), col("lang"), col("source"),
-        maskedText.as("masked_text"),
+        TextAnalysis.piiMaskedExpr.as("masked_text"),
         TextAnalysis.normalizedExpr.as("norm_text"),
         TextAnalysis.splitExpr.as("split"))
       .withColumn("norm_hash", md5(col("norm_text")))

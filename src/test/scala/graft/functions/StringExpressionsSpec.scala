@@ -102,6 +102,24 @@ class StringExpressionsSpec extends AnyFunSuite {
     edges.foreach(r => assert(r.getLong(0) == r.getLong(1), r.toString))
     assert(edges(0).getLong(0) == 0L)
     assert(edges(1).getLong(0) == 'A'.toLong)
+    // non-ASCII, supplementary-plane and lone-byte rows against a plain
+    // fold over the code points of the decoded string (an invalid byte
+    // decodes to U+FFFD); ASCII prefixes check the switch to the decoded
+    // fold mid-row
+    def raw(bytes: Int*): Array[Byte] = bytes.map(_.toByte).toArray
+    def utf8(s: String): Array[Byte] =
+      s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+    val rows = Seq("é", "abc é", "中文", "😀", "a😀b", "𝄞𝄞", "İ", "K",
+      "mixed ascii then ß").map(utf8) ++
+      Seq(raw(0xff), raw(0x80), utf8("ab") ++ raw(0xc3), raw(0xed, 0xa0, 0x80),
+        utf8("x") ++ raw(0xf0, 0x9f) ++ utf8("y"))
+    def fold(b: Array[Byte]): Long =
+      new String(b, java.nio.charset.StandardCharsets.UTF_8).codePoints()
+        .toArray.foldLeft(0L)((acc, cp) => (acc * 31 + cp) % 1000000007L)
+    val got = rows.map(b => Tuple1(b)).toDF("b")
+      .select(StringFunctions.poly_hash(col("b").cast("string")))
+      .collect().map(_.getLong(0)).toSeq
+    assert(got == rows.map(fold))
   }
 
   test("codepoint_histogram ≡ the 16 per-bin HOF filters on the corpus") {
