@@ -1,20 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // production planning: ranked-window top-k runs on the bounded-heap
     // TopKPerKeyExec (same rows, no per-group sort — spec-pinned and
     // Verify runs the oracle gate through the same rewrite)
-    graft.plans.TopKPlanning.register(spark)
+    val spark = Session()
     def jstr(s: String): String =
       "\"" + s.flatMap {
         case '"' => "\\\""; case '\\' => "\\\\"
@@ -174,7 +165,7 @@ object Bench {
     val warmup =
       if (sys.env.get("SPARK_GRAFT_WARMUP").contains("off")) "off" else "full"
     val excludedJson = excluded.toSeq.sorted.map(jstr).mkString("[", ",", "]")
-    val sessionLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs,"sf":"$sfDir","build":"$buildTag","cpus":$cpus,"warmup":"$warmup","warmup_dir":${jstr(warmupDir)},"excluded":$excludedJson,"agg":"full-registry untimed warm-up pass, then min-of-$Iterations per query, cache cleared per run; spread=[min,median,max]","registry":"production (no canonicalization sort)"}"""
+    val sessionLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"spread":$spread,"errors":$errs,"sf":"$sfDir","build":"$buildTag","cpus":${Session.cpus},"warmup":"$warmup","warmup_dir":${jstr(warmupDir)},"excluded":$excludedJson,"agg":"full-registry untimed warm-up pass, then min-of-$Iterations per query, cache cleared per run; spread=[min,median,max]","registry":"production (no canonicalization sort)"}"""
     System.err.println(s"[bench] session: $sessionLine")
     // Archive the session under bench_runs/ for tools-side pooling
     // (tools/bench_pool.sh min-merges same-build same-sf same-cpus

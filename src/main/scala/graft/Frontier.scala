@@ -146,16 +146,7 @@ object Frontier {
     // advisor can hold clustered and isotropic filtered evidence apart
     val clusteredFiltered = flags.contains("--clustered-filtered")
     val sweepOnly = flags.contains("--sweep-only")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) =>
-      builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPlanning.register(spark)
+    val spark = Session()
     val registry = SparkEntry.benchQueries
     val baseVecs = graft.sources.Tables.load(spark, sfDir, "embeddings").count()
     try graft.sources.Tables.load(spark, sfDir, "embeddings").count()

@@ -351,27 +351,18 @@ object PipelineRun {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val outDir = args.lift(1).getOrElse("target/pipeline_out")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
     // ranked stages (the dedup window) run on the bounded-heap operator
-    graft.plans.TopKPlanning.register(spark)
+    val spark = Session()
 
     val out = curated(spark, sfDir)
     out.write.mode("overwrite").partitionBy("split").parquet(outDir)
 
     val total = Tables.documents(spark, sfDir).count()
-    val written = spark.read.parquet(outDir)
-    val bySplit = written.groupBy(col("split")).count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    val bySplit = spark.read.parquet(outDir).groupBy(col("split")).count()
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     val summary = Seq(
       "docs_in" -> total,
-      "docs_out" -> written.count(),
+      "docs_out" -> bySplit.values.sum,
       "train" -> bySplit.getOrElse("train", 0L),
       "val" -> bySplit.getOrElse("val", 0L),
       "test" -> bySplit.getOrElse("test", 0L))

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit CLI: one JSON line per production-registry query with the
   * physical-plan facts the scale story depends on — shuffle Exchange
   * count, broadcast-join count, and whole-stage-codegen span count.
@@ -34,17 +32,7 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "false") // see codegenSpanCount
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) =>
-      builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPlanning.register(spark)
+    val spark = Session("spark.sql.adaptive.enabled" -> "false") // see codegenSpanCount
     SparkEntry.productionQueries.toSeq.sortBy(_._1).foreach {
       case (name, fn) =>
         val line = try {

@@ -1,12 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions.col
-
 /** Scratch profiler (measurement-only main — excluded from the bench
   * build fingerprint; repointed per round at the current bench hog).
   *
-  * Round 17 (optimization round): three modes.
+  * Three modes:
   *
   *   runMain graft.Profile rows <sfDir> [substr,substr,...]
   *     Per-registry-row empirical shape: wall (min-of-2 after one
@@ -20,9 +17,9 @@ import org.apache.spark.sql.functions.col
   *     wall, task count, Σtask, shuffle read/write, first line of the
   *     stage's name/callsite — sorted by wall desc.
   *
-  *   runMain graft.Profile delta <sfDir> [scaledDir]
-  *     The round-15 sim_ann_index_delta build/append/query phase split
-  *     (see git history for rationale).
+  *   runMain graft.Profile explain <sfDir> [outDir] [suffix] [substr,...]
+  *     explain("formatted") of the selected rows, one file each at
+  *     <outDir>/<row>_<suffix>.txt (defaults plans/r17, before).
   */
 object Profile {
 
@@ -58,27 +55,7 @@ object Profile {
     val mode = args.headOption.getOrElse("rows")
     val sfDir = args.lift(1).getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPlanning.register(spark)
-
-    def timeMin2(name: String)(f: Int => Unit): Double = {
-      val runs = (1 to 2).map { i =>
-        spark.catalog.clearCache()
-        val t0 = System.nanoTime()
-        f(i)
-        (System.nanoTime() - t0) / 1e9
-      }
-      val sec = runs.min
-      println(f"PROFILE $name: $sec%.2f s")
-      sec
-    }
+    val spark = Session()
 
     mode match {
       case "rows" =>
@@ -152,51 +129,6 @@ object Profile {
             } catch { case e: Throwable =>
               println(s"ERR $name: ${e.getMessage.take(160)}") }
           }
-      case "delta" =>
-        val scaledDir = args.lift(2)
-        graft.sources.Tables.region(spark, sfDir).count() // JVM/codegen warmup
-        for ((dir, label) <- Seq(sfDir -> "1x") ++
-            scaledDir.map(_ -> "10x").toSeq) {
-          println(s"--- $label ($dir) ---")
-          val e = graft.sources.Tables.embeddings(spark, dir)
-          val base = e.filter(col("vec_id") % 8 =!= 7)
-          val delta = e.filter(col("vec_id") % 8 === 7)
-          val stamp = System.nanoTime()
-          def freshRoot(tag: String): String =
-            s"${System.getProperty("java.io.tmpdir")}/graft_profile_${stamp}_$tag"
-          // BUILD phase: fresh root per run so the second run re-pays the
-          // full training + postings write, not an overwrite shortcut
-          val tBuild = timeMin2(s"$label build(base)") { i =>
-            graft.operators.Similarity.buildIvfPqIndexProdOn(
-              spark, base, freshRoot(s"b$i"))
-          }
-          // APPEND phase: against a PRE-BUILT artifact not timed here;
-          // fresh root + unique batch id per run → full commit-log cost
-          val appendRoots = (1 to 2).map { i =>
-            val r = freshRoot(s"a$i")
-            graft.operators.Similarity.buildIvfPqIndexProdOn(spark, base, r)
-            r
-          }
-          val tAppend = timeMin2(s"$label append(delta)") { i =>
-            graft.operators.Similarity.appendToIvfPqIndexProd(
-              spark, delta, appendRoots(i - 1), s"profile-delta-$stamp-$i")
-          }
-          // QUERY phase: warm artifact (the first append root, now complete)
-          val tQuery = timeMin2(s"$label query(full)") { _ =>
-            graft.operators.Similarity.annIvfPqIndexed(
-              spark, dir, appendRoots(0)).count()
-          }
-          // the registry row itself — its own roots, the bench wall
-          val fn = SparkEntry.benchQueries("sim_ann_index_delta")
-          val tFull = timeMin2(s"$label sim_ann_index_delta (registry row)") {
-            _ => fn(spark, dir).count()
-          }
-          println(f"PROFILE $label summary: build=$tBuild%.2f s " +
-            f"append=$tAppend%.2f s query=$tQuery%.2f s " +
-            f"phase_sum=${tBuild + tAppend + tQuery}%.2f s " +
-            f"registry_row=$tFull%.2f s " +
-            f"harness_residual=${tFull - tBuild - tAppend - tQuery}%.2f s")
-        }
     }
     spark.stop()
   }

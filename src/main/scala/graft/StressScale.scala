@@ -347,23 +347,17 @@ object StressScale {
     val sfDir = args(0)
     val outRoot = args(1)
     val factor = args(2).toInt
+    require(factor >= 2 || args.contains("--compose-only") ||
+      args.contains("--pair-stage"), "factor must be >= 2")
+    val spark = Session()
     // --compose-only: synthesize + symlink the composed N× layout and
     // exit — how the pool launcher pre-builds corpora without running a
     // single timed query (corpus synthesis must never overlap a timed
     // session)
     if (args.contains("--compose-only")) {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val b0 = SparkSession.builder()
-        .master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.ui.enabled", "false")
-      graft.sources.Tables.requiredConfs.foreach { case (k, v) =>
-        b0.config(k, v) }
-      val s0 = b0.getOrCreate()
-      s0.sparkContext.setLogLevel("WARN")
-      val composed = composeCorpus(s0, sfDir, outRoot, factor)
+      val composed = composeCorpus(spark, sfDir, outRoot, factor)
       println(s"[compose] $composed")
-      s0.stop()
+      spark.stop()
       return
     }
     // --pair-stage: time ONLY the dedup_semantic PAIR stage
@@ -377,27 +371,18 @@ object StressScale {
     // 17) fires on a number, not a debate. Measurement-only: excluded
     // from the bench fingerprint like the rest of this main.
     if (args.contains("--pair-stage")) {
-      val cpus0 = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-      val b0 = SparkSession.builder()
-        .master(s"local[$cpus0]")
-        .config("spark.sql.shuffle.partitions", cpus0)
-        .config("spark.ui.enabled", "false")
-      graft.sources.Tables.requiredConfs.foreach { case (k, v) =>
-        b0.config(k, v) }
-      val s0 = b0.getOrCreate()
-      s0.sparkContext.setLogLevel("WARN")
       val ladder = Seq(1, 10, 30, 100).filter(_ <= factor)
       val rows = ladder.map { f =>
         val d =
           if (f == 1) sfDir
-          else composeCorpus(s0, sfDir, outRoot, f,
+          else composeCorpus(spark, sfDir, outRoot, f,
             tables = Seq("embeddings"))
-        val n = s0.read.parquet(s"$d/embeddings.parquet").count()
+        val n = spark.read.parquet(s"$d/embeddings.parquet").count()
         var pairs = 0L
         val wall = (1 to 2).map { _ =>
-          s0.catalog.clearCache()
+          spark.catalog.clearCache()
           val t0 = System.nanoTime()
-          pairs = graft.operators.Similarity.nearDupLshProd(s0, d).count()
+          pairs = graft.operators.Similarity.nearDupLshProd(spark, d).count()
           (System.nanoTime() - t0) / 1e9
         }.min
         println(f"[pair-stage] x$f n=$n wall=$wall%.2f pairs=$pairs")
@@ -418,19 +403,9 @@ object StressScale {
       catch { case e: Exception =>
         System.err.println(s"[pair-stage] could not write $outPath: " +
           e.getMessage) }
-      s0.stop()
+      spark.stop()
       return
     }
-    require(factor >= 2, "factor must be >= 2")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.sources.Tables.requiredConfs.foreach { case (k, v) => builder.config(k, v) }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.plans.TopKPlanning.register(spark)
 
     val baseDocs = graft.sources.Tables.load(spark, sfDir, "documents").count()
     val scaledDir =

@@ -126,14 +126,13 @@ object Tables {
     *     changes output. Scale-independent: at 100 TB the duplicate
     *     evaluations are full corpus re-scans of the costliest scalar
     *     work the pipeline does.
-    *     CAVEAT (round-17 ADVICE): `excludedRules` is a comma-separated
-    *     whole-value conf, not additive — applying this map OVERWRITES
-    *     any exclusion list supplied via spark-defaults/launcher flags
-    *     (and a later `spark.conf.set` overwrites this one). Every graft
-    *     entry point builds its own session from exactly this map, so
-    *     there is nothing to merge with today; a deployment that needs
-    *     its own exclusions must append this rule to its list rather
-    *     than rely on both surviving.
+    *     CAVEAT: `excludedRules` is a comma-separated whole-value conf,
+    *     not additive — applying this map as is OVERWRITES any exclusion
+    *     list supplied via spark-defaults/launcher flags (and a later
+    *     `spark.conf.set` overwrites this one). [[graft.Session]], which
+    *     builds every entry-point main's session, appends this rule to
+    *     the launcher's list instead; perfbench's session applies the
+    *     map as is.
     *   - `canChangeCachedPlanOutputPartitioning` deliberately left at
     *     its default (false) — round 17 tried `true` (AQE coalescing of
     *     cached-plan partitions removes ~250 ms/task of block-manager

@@ -72,8 +72,8 @@ echo "[pool] sessions ok=$ok failed=$failed"
 # Continue-past-one-failure is for a flaky SESSION, not a broken build:
 # with zero successes there is no fresh artifact behind $OUT (the
 # headline below would be stale or missing), so the pool itself must
-# fail — campaign scripts log our exit status and an all-failed pool
-# passing silently is exactly how a stale headline gets committed.
+# fail — a caller that logs our exit status must see it, and an
+# all-failed pool passing silently is how a stale headline gets committed.
 if [ "$ok" -eq 0 ]; then
   echo "[pool] FATAL: all $N sessions failed — no fresh headline" >&2
   exit 1
